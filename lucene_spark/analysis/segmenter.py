@@ -516,7 +516,8 @@ def parse_mecab_char_def(char_text: str) -> dict:
     are ``0xXXXX[..0xYYYY] NAME [NAME2 ...]`` (only the first/primary
     category is used here, like the decoder's char->class table).
     Comments (#) and blanks are skipped.  Mapping ranges accumulate into
-    each class's regex character-class body.
+    each class's regex character-class body, each code point escaped so
+    regex metacharacters (``]``, ``\\``, ``^``, ``-``) map literally.
     """
     classes: dict[str, UnknownCharClass] = {}
     ranges: dict[str, list[str]] = {}
@@ -530,8 +531,11 @@ def parse_mecab_char_def(char_text: str) -> dict:
             name = parts[1]
             a = int(lo, 16)
             b = int(hi, 16) if hi else a
+            # chars is a regex class BODY: escape each code point so
+            # ] \ ^ - stay literal members
+            lo_c, hi_c = re.escape(chr(a)), re.escape(chr(b))
             ranges.setdefault(name, []).append(
-                chr(a) if a == b else f"{chr(a)}-{chr(b)}"
+                lo_c if a == b else f"{lo_c}-{hi_c}"
             )
         else:
             if len(parts) < 4:

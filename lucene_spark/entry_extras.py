@@ -3482,9 +3482,10 @@ ORDER BY c_custkey ASC""",
 _register_geo3d()
 
 
-#: mid-latitude polygon for the WGS84 membership pair — where the
-#: geodetic->reduced latitude shift peaks (~0.096 deg at 45), so the
-#: ellipsoid and sphere answers genuinely differ in a boundary band
+#: mid-latitude polygon for the WGS84 membership pair. Sphere and WGS84
+#: polygon membership provably agree (geo3d.polygon_contains); the
+#: geodetic->reduced latitude shift peaks here (~0.096 deg at 45), so this
+#: is where an error in the WGS84 path would first show
 _G3D_POLY_W = [(38.0, -10.0), (38.0, 25.0), (52.0, 25.0), (52.0, -10.0)]
 
 _ONE_MINUS_F = 1.0 - 1.0 / 298.257223563

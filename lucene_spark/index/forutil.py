@@ -138,11 +138,25 @@ def pfor_decode(buf: bytes) -> np.ndarray:
 
 
 def delta_encode(doc_ids: np.ndarray) -> tuple[int, np.ndarray]:
-    """Sorted doc IDs -> (first_doc, gaps[n-1]); gaps are >=1 for unique docs."""
+    """Strictly increasing doc IDs -> (first_doc, uint32 gaps[n-1]).
+
+    Raises ``ValueError`` on a gap that the uint32 format cannot hold: a
+    gap <= 0 (unsorted or duplicate ids) or >= 2**32 (e.g. a block that
+    spans batch-built ids and the NRT range from 2**40) would otherwise
+    wrap and decode to different doc ids."""
     doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
     if len(doc_ids) == 0:
         return 0, np.empty(0, dtype=np.uint32)
-    return int(doc_ids[0]), np.diff(doc_ids).astype(np.uint32)
+    gaps = np.diff(doc_ids)
+    bad = np.flatnonzero((gaps <= 0) | (gaps > 0xFFFFFFFF))
+    if len(bad):
+        i = int(bad[0])
+        raise ValueError(
+            f"doc id gap {int(gaps[i])} between {int(doc_ids[i])} and "
+            f"{int(doc_ids[i + 1])} does not fit the uint32 gap format "
+            "(ids must be strictly increasing, gaps < 2**32)"
+        )
+    return int(doc_ids[0]), gaps.astype(np.uint32)
 
 
 def delta_decode(first_doc: int, gaps: np.ndarray) -> np.ndarray:

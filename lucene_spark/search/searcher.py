@@ -225,10 +225,10 @@ class IndexSearcher:
         #: True once preload_stats loaded the ENTIRE term dictionary —
         #: multi-term rewrite (e.g. complexphrase._expand) is then zero-job
         self._stats_all_loaded = False
-        #: per-field positions-decoded postings cache
-        #: (cache_decoded_positions) — positional plans filter this frame
-        #: instead of re-decoding blocks per query
-        self._pos_cache: dict[str, DataFrame] = {}
+        #: per-field decoded postings frame (cache_decoded_positions):
+        #: (term, doc_id, freq, norm, positions) rows that every _decoded
+        #: caller filters instead of re-decoding blocks per query
+        self._decoded_cache: dict[str, DataFrame] = {}
         #: per-hot-term block metadata preloaded by preload_block_meta
         #: (serving layout): anchor block keys, the term's global impact
         #: frontier, and a block-bound histogram — kills the per-query
@@ -303,8 +303,9 @@ class IndexSearcher:
         cache to ~core-count partitions (every query scans the cache, so
         hundreds of build-time shuffle partitions mean hundreds of tasks
         per search) and preload the term dictionary stats.
-        ``cache_positions=True`` additionally materializes the
-        positions-decoded postings (see :meth:`cache_decoded_positions`)."""
+        ``cache_positions=True`` additionally materializes the decoded
+        serving frame (see :meth:`cache_decoded_positions`), which every
+        query family then filters instead of decoding blocks."""
         spark = self.index.docs.sparkSession
         p = partitions or spark.sparkContext.defaultParallelism
         old = self.index.postings
@@ -325,20 +326,25 @@ class IndexSearcher:
             self.cache_decoded_positions()
 
     def cache_decoded_positions(self, max_positions: int = 1 << 27) -> bool:
-        """Serving layout, part 3: keep the POSITIONS-DECODED postings of
-        every field materialized, so positional plans (phrase, sloppy,
-        intervals, spans, the complexPhrase/XML/surround parser dialects)
-        filter a cached (term, doc_id, freq, norm, positions) frame
-        instead of re-running the Arrow block decode per query — the
-        Python decode stage is the dominant fresh-run cost of a
-        positional query at serving time.
+        """Serving layout, part 3: materialize ONE decoded frame per field,
+        (term, doc_id, freq, norm, positions) rows, and route every
+        :meth:`_decoded` read through it. Scoring, boolean, multi-term
+        (prefix, wildcard, fuzzy, range), ``search_many``, explain and
+        classification reads filter the frame and drop ``positions``;
+        positional plans (phrase, sloppy, intervals, spans, the
+        complexPhrase/XML/surround dialects) keep it. No query re-runs
+        the Arrow block decode, which is the dominant per-query executor
+        cost at serving time. Deletes still apply after the read
+        (:meth:`_live`); the bloom segment predicate is not needed, since
+        the frame is exact and bloom only prunes.
 
         Memory is O(total positions); a field whose summed term frequency
-        exceeds ``max_positions`` is skipped (returns False if any field
-        was skipped). At cluster scale this is a per-shard HOT-FIELD
-        cache decision — the raw blocks remain authoritative and every
-        plan works identically without the cache (bit-identity pinned by
-        ``test_positions_cache_identity``)."""
+        exceeds ``max_positions`` gets no frame (returns False if any
+        field was skipped). Without a frame, :meth:`_decoded` falls back
+        to the block decode, with identical results: the raw blocks stay
+        authoritative and the frame is a per-shard hot-field cache
+        decision (bit-identity pinned by ``test_positions_cache_identity``
+        and ``test_decoded_frame_identity``)."""
         ok = True
         for fname, fs in self.index.fieldstats.items():
             if fs.sum_total_term_freq > max_positions:
@@ -347,7 +353,7 @@ class IndexSearcher:
             d = self._decoded(fname, F.lit(True), with_positions=True)
             # eager localCheckpoint: same plan-truncation rationale as the
             # compact postings cache above
-            self._pos_cache[fname] = d.localCheckpoint(eager=True)
+            self._decoded_cache[fname] = d.localCheckpoint(eager=True)
         return ok
 
     def preload_stats(self, max_terms: int = 1 << 20) -> bool:
@@ -659,17 +665,20 @@ class IndexSearcher:
         with_positions: bool = False,
         terms: list[str] | None = None,
     ) -> DataFrame:
+        cached = self._decoded_cache.get(field)
+        if cached is not None:
+            # serving layout: filter the materialized decoded frame —
+            # callers' term predicates reference only the `term` column,
+            # present in both the block and decoded schemas. The bloom
+            # segment predicate is skipped: the frame is exact and bloom
+            # only prunes.
+            d = cached.filter(term_pred)
+            return d if with_positions else d.select(_DECODE_SCHEMA.fieldNames())
+        blocks = self._blocks(field, term_pred, terms=terms)
         if with_positions:
-            cached = self._pos_cache.get(field)
-            if cached is not None:
-                # serving layout: filter the materialized decoded frame —
-                # callers' term predicates reference only the `term`
-                # column, present in both the block and decoded schemas
-                return cached.filter(term_pred)
-            return self._blocks(field, term_pred, terms=terms).mapInPandas(
+            return blocks.mapInPandas(
                 _decode_blocks_with_positions, schema=_DECODE_POS_SCHEMA
             )
-        blocks = self._blocks(field, term_pred, terms=terms)
         cols = [
             "term",
             "first_doc",

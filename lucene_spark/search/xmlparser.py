@@ -246,9 +246,11 @@ def _build_query(el: ET.Element, field: str | None, analyzer) -> Q.Query:
                 _text(el),
                 max_query_terms=int(el.get("maxQueryTerms", "20")),
                 min_term_freq=int(el.get("minTermFrequency", "1")),
+                # a PERCENT, like LikeThisQueryBuilder (default 30)
                 percent_terms_to_match=float(
-                    el.get("percentTermsToMatch", "0.3")
-                ),
+                    el.get("percentTermsToMatch", "30")
+                )
+                / 100,
             ),
         )
     if tag in _SPAN_TAGS:

@@ -2,6 +2,7 @@
 PForUtil in the reference)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from lucene_spark.index import forutil
@@ -43,5 +44,25 @@ def test_pfor_patches_outliers_compactly():
 @settings(max_examples=100)
 def test_delta_roundtrip(docs):
     arr = np.sort(np.array(docs, dtype=np.int64))
+    first, gaps = forutil.delta_encode(arr)
+    assert np.array_equal(forutil.delta_decode(first, gaps), arr)
+
+
+@pytest.mark.parametrize(
+    "docs",
+    [
+        [31, 1 << 40],  # batch id next to an NRT id: gap >= 2**32
+        [0, 1 << 32],  # smallest gap that wraps
+        [3, 5, 5],  # duplicate id: gap 0
+        [9, 4],  # unsorted: negative gap
+    ],
+)
+def test_delta_encode_rejects_gaps_outside_uint32(docs):
+    with pytest.raises(ValueError, match="uint32 gap format"):
+        forutil.delta_encode(np.array(docs, dtype=np.int64))
+
+
+def test_delta_encode_keeps_largest_uint32_gap():
+    arr = np.array([1 << 40, (1 << 40) + 0xFFFFFFFF], dtype=np.int64)
     first, gaps = forutil.delta_encode(arr)
     assert np.array_equal(forutil.delta_decode(first, gaps), arr)

@@ -831,7 +831,7 @@ def test_positions_cache_identity(built):
     idx, plain, _ = built
     cached = IndexSearcher(idx)
     assert cached.cache_decoded_positions()
-    assert "content" in cached._pos_cache
+    assert "content" in cached._decoded_cache
 
     def rows(df):
         return sorted(
@@ -847,6 +847,66 @@ def test_positions_cache_identity(built):
     assert rows(IV.matches(plain, src)) == rows(IV.matches(cached, src))
     cp = '"th* if"~1'
     assert rows(CP.execute(plain, cp, k=10)) == rows(CP.execute(cached, cp, k=10))
+
+
+def test_decoded_frame_identity(built):
+    """The decoded serving frame serves the non-positional families too:
+    term, OR, AND, prefix, search_many, explain and matches() are
+    bit-identical between a searcher holding the frame, a plain one, and
+    an over-budget one (cache_decoded_positions(max_positions=0) keeps no
+    frame and falls back to the block decode)."""
+    from lucene_spark.search.explain import explain
+
+    idx, plain, _ = built
+    cached = IndexSearcher(idx)
+    assert cached.cache_decoded_positions()
+    over = IndexSearcher(idx)
+    assert not over.cache_decoded_positions(max_positions=0)
+    assert over._decoded_cache == {}
+
+    def rows(df):
+        return sorted(
+            tuple(float(x) if isinstance(x, float) else x for x in r)
+            for r in df.collect()
+        )
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    q_term = Q.TermQuery("content", "the")
+    q_or = Q.BooleanQuery(
+        (
+            Q.BooleanClause(Q.TermQuery("content", "if"), Q.Occur.SHOULD),
+            Q.BooleanClause(Q.TermQuery("content", "return"), Q.Occur.SHOULD),
+        )
+    )
+    q_and = Q.BooleanQuery(
+        (
+            Q.BooleanClause(Q.TermQuery("content", "the"), Q.Occur.MUST),
+            Q.BooleanClause(Q.TermQuery("content", "if"), Q.Occur.MUST),
+        )
+    )
+    q_prefix = Q.PrefixQuery("content", "re")
+    family = {"term": q_term, "or": q_or, "and": q_and, "prefix": q_prefix}
+    # the frame, not the Python block decode, answers the cached searcher
+    assert "MapInPandas" not in plan(cached.search(q_term, k=10))
+    assert "MapInPandas" in plan(over.search(q_term, k=10))
+    for name, q in family.items():
+        want = rows(plain.search(q, k=10))
+        assert want, name
+        assert rows(cached.search(q, k=10)) == want, name
+        assert rows(over.search(q, k=10)) == want, name
+        want_m = rows(plain.matches(q))
+        assert rows(cached.matches(q)) == want_m, name
+        assert rows(over.matches(q)) == want_m, name
+    batch = {n: q for n, q in family.items() if n != "prefix"}
+    want_b = rows(plain.search_many(batch, k=10))
+    assert rows(cached.search_many(batch, k=10)) == want_b
+    assert rows(over.search_many(batch, k=10)) == want_b
+    for d in [int(r["doc_id"]) for r in plain.search(q_term, k=3).collect()]:
+        want_e = explain(plain, q_term, d)
+        assert explain(cached, q_term, d) == want_e
+        assert explain(over, q_term, d) == want_e
 
 
 def test_scored_term_set_caps_driver_collect(built, spark):

@@ -439,6 +439,36 @@ def test_unknown_class_invoke_and_length_flags():
     assert all(len(t) <= 2 for t in out)
 
 
+def test_char_def_escapes_regex_metacharacters():
+    """char.def code points that are regex class metacharacters map
+    literally: ']' (0x5D), '\\' (0x5C) and '^' (0x5E) as single entries
+    and as range endpoints, without leaking '-' into the class."""
+    import re
+
+    from lucene_spark.analysis.segmenter import (
+        LatticeSegmenter,
+        parse_mecab_char_def,
+    )
+
+    char_def = """
+SYMBOL 1 1 0
+RANGE 1 1 0
+0x005D SYMBOL
+0x005C SYMBOL
+0x005E SYMBOL
+0x005C..0x005E RANGE
+"""
+    classes = parse_mecab_char_def(char_def)
+    seg = LatticeSegmenter(entries={}, unknown_classes=classes)
+    compiled = {name: rx for name, rx, _ in seg._unk}
+    for name in ("SYMBOL", "RANGE"):
+        members = {
+            ch for ch in map(chr, range(0x20, 0x7F)) if compiled[name].match(ch)
+        }
+        assert members == {"]", "\\", "^"}, name
+        assert re.compile(f"[{classes[name].chars}]").match("-") is None
+
+
 def test_char_def_unk_def_loaders_and_rank_identity(spark):
     """parse_mecab_char_def + apply_mecab_unk_csv read the published
     formats; a mixed known/unknown corpus indexed with the class-aware

@@ -5,6 +5,7 @@ segment catalog (index/CheckIndex.java), merge equivalence
 (SegmentMerger.merge), and openIfChanged-style NRT visibility."""
 
 import shutil
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -147,3 +148,33 @@ def test_nrt_micro_segments(spark, tmp_path):
     assert all(r["doc_id"] >= (1 << 40) for r in hits)
     # base docs still searchable
     assert s.search(Q.TermQuery("text", "spark"), k=5).count() == 5
+
+
+def test_mixed_batch_nrt_merge_raises(spark, tmp_path):
+    """A merge over batch-built and NRT segments puts doc ids below and
+    above 2**40 into one block; their gap does not fit the uint32 gap
+    format, so the merge must fail instead of writing wrapped ids
+    (2**40 + k read back as 2**32 + k). The failed merge leaves the
+    segment catalog as it was."""
+    from lucene_spark.streaming.nrt import EPOCH_BASE, micro_segment_writer
+
+    index_dir = str(tmp_path / "mixed_idx")
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    build_segmented(spark, docs.limit(200), CFG, index_dir)
+    new = docs.limit(2).select(
+        F.lit("zzzmixedterm spark").alias("text"), "lang", "source"
+    )
+    micro_segment_writer(index_dir, replace(CFG, doc_id_col=None, order_by=None))(
+        new, 0
+    )
+    segs = list_segments(spark, index_dir)
+    assert any(d["seg_lo"] >= EPOCH_BASE for d in segs)
+    assert any(d["seg_lo"] < EPOCH_BASE for d in segs)
+    with pytest.raises(Exception, match="uint32 gap format"):
+        merge_segments(spark, index_dir, CFG, candidates=segs)
+    assert sorted(d["segment"] for d in list_segments(spark, index_dir)) == sorted(
+        d["segment"] for d in segs
+    )
+    s = IndexSearcher(load_segments(spark, index_dir, CFG))
+    hits = s.search(Q.TermQuery("text", "zzzmixedterm"), k=10).collect()
+    assert sorted(r["doc_id"] for r in hits) == [EPOCH_BASE, EPOCH_BASE + 1]

@@ -189,13 +189,47 @@ def test_core_plus_like_this_query(searchers):
     and matches similar docs with percentTermsToMatch as msm."""
     xml = (
         '<LikeThisQuery fieldNames="contents" maxQueryTerms="6" '
-        'percentTermsToMatch="0.3">workers killed in a mine</LikeThisQuery>'
+        'percentTermsToMatch="30">workers killed in a mine</LikeThisQuery>'
     )
     got = _ids(searchers, xml)
     assert 5 in got  # the near-duplicate doc
     assert got <= {3, 4, 5}
     with pytest.raises(XP.XmlParseError):
         XP.parse("<BoostingQuery><Query/></BoostingQuery>")
+
+
+def test_like_this_percent_terms_to_match_is_a_percent(searchers):
+    """Reference format (LikeThisQueryBuilder.java): percentTermsToMatch
+    is a percentage, default 30 — "30" resolves to the same
+    minimum-should-match as the default, "100" requires every term."""
+    from lucene_spark.search.extras import like_this_query
+
+    text = "workers killed in a mine"
+
+    def xml(attr):
+        return (
+            f'<LikeThisQuery fieldNames="contents" maxQueryTerms="6"{attr}>'
+            f"{text}</LikeThisQuery>"
+        )
+
+    def resolved(attr):
+        q = XP.parse(xml(attr), default_field="contents")
+        return like_this_query(
+            searchers["contents"],
+            q.text,
+            max_query_terms=q.max_query_terms,
+            min_term_freq=q.min_term_freq,
+            percent_terms_to_match=q.percent_terms_to_match,
+        )
+
+    default, thirty = resolved(""), resolved(' percentTermsToMatch="30"')
+    assert thirty == default
+    n = len(default.clauses)
+    assert n >= 2 and default.minimum_should_match == int(n * 0.3)
+    assert resolved(' percentTermsToMatch="100"').minimum_should_match == n
+    assert _ids(searchers, xml(' percentTermsToMatch="30"')) == _ids(
+        searchers, xml("")
+    )
 
 
 def test_classic_parser_ext_syntax(searchers):
