@@ -244,11 +244,6 @@ def _get_pruned_searcher(spark, sf_dir) -> IndexSearcher:
         # corpora to the plain path; these entries exist to drive-check the
         # pruned plan's arithmetic, so the cost model is bypassed here
         s = IndexSearcher(idx, prune_min_df=64, prune_engage_min_rows=0)
-        # force the rescore branch past the cost guard: at test scale
-        # every block survives the keep rule (tiny corpora can't show
-        # selectivity), and the point of these entries is proving the
-        # two-phase plan's arithmetic, not its cost model
-        s.prune_keep_frac = 2.0
         _PRUNED_CACHE[sf_dir] = s
     return _PRUNED_CACHE[sf_dir]
 
@@ -279,9 +274,9 @@ sc AS (
 {_topk_sql('sc')}""",
 )
 def boolean_or_pruned(spark, sf_dir):
-    """Scored disjunction through the MAXSCORE-family pruned path
-    (MaxScoreBulkScorer.java:28-70): per-clause block bounds + exact
-    rescore of the candidate superset; oracle-identical to the full
+    """Scored disjunction through the MAXSCORE essential split
+    (MaxScoreBulkScorer.java:28-70): the weaker clause decodes only the
+    blocks holding candidate docs; oracle-identical to the full
     SHOULD-sum."""
     s = _get_pruned_searcher(spark, sf_dir)
     q = Q.BooleanQuery.of(

@@ -133,29 +133,19 @@ def more_like_this(
     )
 
 
-def like_this_query(
-    searcher: IndexSearcher,
-    text: str,
-    max_query_terms: int = 20,
-    min_term_freq: int = 1,
-    percent_terms_to_match: float = 0.3,
-) -> Q.Query:
-    """MoreLikeThisQuery built from free TEXT (queries/mlt/
-    MoreLikeThisQuery.java:38, the CorePlus ``<LikeThisQuery>`` element's
-    target): analyze the text, keep terms with tf >= min_term_freq that
-    exist in the index, rank (tf desc, df asc, term asc) like
-    :func:`interesting_terms`, take ``max_query_terms``, and return a
-    SHOULD boolean with minimumNumberShouldMatch =
-    ``percent_terms_to_match * n_terms`` (MoreLikeThisQuery.java:66).
-    Scoring is the engine's BM25 SHOULD sum — the reference's unboosted
-    MoreLikeThis default."""
+def like_this_terms(
+    searcher: IndexSearcher, text: str, min_term_freq: int = 1
+) -> list[tuple[int, int, str]]:
+    """MoreLikeThis term candidates of free TEXT in the searcher's field:
+    ``(tf, df, term)`` for every analyzed term with tf >= min_term_freq
+    that exists in the index (df > 0). One term-dictionary lookup."""
     from collections import Counter
 
     an = searcher.index.config.analyzer
     tf = Counter(an.terms(text) if an else _std_terms(text))
     cand = sorted(t for t, c in tf.items() if c >= min_term_freq)
     if not cand:
-        return Q.MatchNoDocsQuery()
+        return []
     if len(cand) > MAX_TERM_SET:
         raise ValueError(
             f"like_this_query: text yields {len(cand)} candidate terms "
@@ -169,8 +159,27 @@ def like_this_query(
         .select("term", "df")
         .collect()
     )
+    return [(tf[r["term"]], int(r["df"]), r["term"]) for r in stats]
+
+
+def like_this_query(
+    searcher: IndexSearcher,
+    text: str,
+    max_query_terms: int = 20,
+    min_term_freq: int = 1,
+    percent_terms_to_match: float = 0.3,
+) -> Q.Query:
+    """MoreLikeThisQuery built from free TEXT (queries/mlt/
+    MoreLikeThisQuery.java:38, the CorePlus ``<LikeThisQuery>`` element's
+    target): analyze the text, keep terms with tf >= min_term_freq that
+    exist in the index (:func:`like_this_terms`), rank (tf desc, df asc,
+    term asc) like :func:`interesting_terms`, take ``max_query_terms``,
+    and return a SHOULD boolean with minimumNumberShouldMatch =
+    ``percent_terms_to_match * n_terms`` (MoreLikeThisQuery.java:66).
+    Scoring is the engine's BM25 SHOULD sum — the reference's unboosted
+    MoreLikeThis default."""
     ranked = sorted(
-        ((-tf[r["term"]], r["df"], r["term"]) for r in stats),
+        (-tf, df, t) for tf, df, t in like_this_terms(searcher, text, min_term_freq)
     )[:max_query_terms]
     sel = [t for _, _, t in ranked]
     if not sel:

@@ -17,7 +17,11 @@ Execution-model parity with the reference (``search/IndexSearcher.java``):
   ``(max_freq, min_norm)`` impacts, a first pass over the highest-impact
   blocks establishes the running k-th score, remaining blocks with
   ``upper_bound < theta`` are never decoded (WAND family:
-  ``search/WANDScorer.java:32-55``, ``MaxScoreCache.java:59-140``).
+  ``search/WANDScorer.java:32-55``, ``MaxScoreCache.java:59-140``);
+- term disjunction top-k applies the MAXSCORE essential split: clauses
+  whose combined bound stays below theta are only probed at candidate
+  docs (``search/MaxScoreBulkScorer.java:28-70``); a query no clause of
+  which demotes takes the plain one-shuffle plan.
 """
 
 from __future__ import annotations
@@ -125,6 +129,26 @@ def _decode_blocks_with_positions(
         yield out
 
 
+_DECODE_COLS = ["term", "first_doc", "doc_gaps", "freqs", "norms"]
+
+
+def _decode(blocks: DataFrame) -> DataFrame:
+    """(term, doc_id, freq, norm) rows of a postings-block frame — the one
+    Arrow block decode that the no-frame reads and the pruned plans share."""
+    return blocks.select(_DECODE_COLS).mapInPandas(
+        _decode_blocks, schema=_DECODE_SCHEMA
+    )
+
+
+def _by_term(values: dict[str, float]) -> Column:
+    """Per-term float lookup as a literal CASE chain on ``term`` (stays in
+    codegen); null for any other term."""
+    col = F.lit(None).cast("float")
+    for t, v in values.items():
+        col = F.when(F.col("term") == t, F.lit(v).cast("float")).otherwise(col)
+    return col
+
+
 def _wildcard_to_regex(pattern: str) -> str:
     parts = []
     for ch in pattern:
@@ -153,7 +177,7 @@ class IndexSearcher:
     PRUNE_MIN_DF = 1 << 16
 
     #: engagement gate (the cost decision in
-    #: ``search/BooleanScorerSupplier.java:288-318``): the pruned ladders
+    #: ``search/BooleanScorerSupplier.java:288-318``): the pruned paths
     #: pay ~4 sequential job barriers of phase latency that the plain
     #: one-shuffle path does not, so they only engage when the rows they
     #: could AVOID decoding — estimated zero-job from the driver stats
@@ -203,23 +227,9 @@ class IndexSearcher:
         #: collect_prune_stats is True:
         #: {"segments_with_bloom", "segments_excluded"}
         self.last_bloom_stats: dict[str, int] | None = None
-        #: disjunction-pruning cost guards (BooleanScorerSupplier role):
-        #: fall back to the plain one-shuffle disjunction when the keep
-        #: rule retains more than this fraction of blocks, or when the
-        #: candidate superset exceeds this row count (broadcast budget)
-        self.prune_keep_frac = 0.5
-        self.prune_max_candidates = 100_000
-        #: essential-strategy budget: candidates are exact-essential docs
-        #: that might still reach the top-k; past this count the
-        #: non-essential probe touches most blocks anyway (flat score
-        #: distributions — near-duplicate corpora — land here) and the
-        #: plain one-shuffle disjunction is strictly cheaper
-        self.essential_max_candidates = 16384
-        #: why the last global essential split declined ("nosplit" | "cap")
-        self._essential_fail_reason: str | None = None
-        #: persisted essential-partial frames whose plans a prior query
-        #: returned (essential-completion branch); unpersisted at the next
-        #: search()/search_many() entry so at most one lingers
+        #: persisted frames whose plans a prior call returned (the query
+        #: cache's evictions); unpersisted at the next search()/
+        #: search_many() entry so none outlives the plan that reads it
         self._deferred_unpersist: list[DataFrame] = []
         self._stats_memo: dict[tuple[str, str], tuple[int, int]] = {}
         #: True once preload_stats loaded the ENTIRE term dictionary —
@@ -250,8 +260,7 @@ class IndexSearcher:
             )
 
     def _drain_deferred_unpersist(self) -> None:
-        """Unpersist essential-partial frames kept alive for a prior
-        query's returned plan (essential-completion branch)."""
+        """Unpersist frames kept alive for a prior call's returned plan."""
         for df_ in self._deferred_unpersist:
             try:
                 df_.unpersist()
@@ -371,8 +380,13 @@ class IndexSearcher:
 
     #: anchor blocks kept per hot term by preload_block_meta
     N_ANCHORS = 16
-    #: histogram resolution for the driver-side keep-fraction estimate
-    N_BINS = 32
+
+    #: candidate budget of the disjunction essential split: at most
+    #: ``min(MAX_CANDIDATES, max(16_384, 64 * k))`` docs may clear the
+    #: essential bound. Past it the non-essential probe touches most
+    #: blocks anyway (flat score distributions land here) and the plain
+    #: one-shuffle disjunction is cheaper.
+    MAX_CANDIDATES = 100_000
 
     def preload_block_meta(self, max_terms: int = 1 << 14) -> int:
         """Serving layout, part 2: per-HOT-TERM block metadata into driver
@@ -390,11 +404,10 @@ class IndexSearcher:
           norm byte (<= 256 pairs) — the term's EXACT max score bound at
           any weight is the float32 max over these pairs, identical to
           the JVM's max-over-blocks of ``_block_ub``;
-        - an N_BINS histogram of per-block bounds — the disjunction cost
-          guard's keep-fraction estimate without a count job.
+        - the term's block count.
 
         Memory: O(hot terms) * ~1 KB; hot terms are the df > 2^16 tail of
-        a Zipfian vocabulary, capped at ``max_terms``. Three one-time jobs
+        a Zipfian vocabulary, capped at ``max_terms``. Two one-time jobs
         per field. Returns the number of terms loaded.
 
         Snapshot semantics (like a point-in-time IndexReader): the loaded
@@ -426,8 +439,9 @@ class IndexSearcher:
             )
             a_rows = (
                 blocks.withColumn("_rk", F.row_number().over(wnd))
+                .withColumn("_nb", F.count("*").over(Window.partitionBy("term")))
                 .filter(F.col("_rk") <= self.N_ANCHORS)
-                .select("term", "seg_id", "block_ord", "_rk")
+                .select("term", "seg_id", "block_ord", "_rk", "_nb")
                 .collect()
             )
             pair_idx = F.sequence(
@@ -448,57 +462,24 @@ class IndexSearcher:
                 .agg(F.max("f").alias("f"))
                 .collect()
             )
-            mx = blocks.groupBy("term").agg(
-                F.max("_sat").alias("mx"), F.count("*").alias("nb")
-            )
-            h_rows = (
-                blocks.join(F.broadcast(mx), "term")
-                .select(
-                    "term",
-                    "mx",
-                    "nb",
-                    F.least(
-                        F.lit(self.N_BINS - 1),
-                        F.floor(
-                            F.col("_sat") / F.col("mx") * self.N_BINS
-                        ).cast("int"),
-                    ).alias("bin"),
-                )
-                .groupBy("term", "bin")
-                .agg(
-                    F.count("*").alias("c"),
-                    F.first("mx").alias("mx"),
-                    F.first("nb").alias("nb"),
-                )
-                .collect()
-            )
             anchors: dict[str, list] = {}
+            n_blocks: dict[str, int] = {}
             for r in sorted(a_rows, key=lambda r: r["_rk"]):
                 anchors.setdefault(r["term"], []).append(
                     (int(r["seg_id"]), int(r["block_ord"]))
                 )
+                n_blocks[r["term"]] = int(r["_nb"])
             frontier: dict[str, list] = {}
             for r in fr_rows:
                 frontier.setdefault(r["term"], []).append((int(r["f"]), int(r["n"])))
-            hist: dict[str, dict] = {}
-            for r in h_rows:
-                h = hist.setdefault(
-                    r["term"],
-                    {
-                        "bins": np.zeros(self.N_BINS, dtype=np.int64),
-                        "max_sat": float(r["mx"]),
-                        "n_blocks": int(r["nb"]),
-                    },
-                )
-                h["bins"][int(r["bin"])] = int(r["c"])
             for t in terms:
-                if t in anchors and t in frontier and t in hist:
+                if t in anchors and t in frontier:
                     fr = np.asarray(frontier[t], dtype=np.int64)
                     self._block_meta[(field, t)] = {
                         "anchors": anchors[t],
                         "frontier_f": fr[:, 0].astype(np.float32),
                         "frontier_n": fr[:, 1],
-                        **hist[t],
+                        "n_blocks": n_blocks[t],
                     }
                     n_loaded += 1
         return n_loaded
@@ -513,30 +494,6 @@ class IndexSearcher:
             return None
         inv = self._cache[field][m["frontier_n"]]
         return float(np.max(self.sim.score(m["frontier_f"], inv, F32(w))))
-
-    def _kept_estimate(
-        self, field: str, thresholds: dict[str, float]
-    ) -> tuple[int, int] | None:
-        """(total_blocks, kept-count upper estimate) for the disjunction
-        cost guard, from the preloaded bound histograms — zero Spark jobs.
-        ``thresholds[t]`` is the keep threshold in weight=1 (sat) units; a
-        block of clause t is kept when its bound clears it. Bin UPPER
-        edges decide, so the estimate only overcounts — the guard can
-        only become more conservative (fall back sooner), never less.
-        Returns None when any clause lacks preloaded metadata."""
-        total = kept = 0
-        for t, thr in thresholds.items():
-            m = self._block_meta.get((field, t))
-            if m is None:
-                return None
-            total += m["n_blocks"]
-            if m["max_sat"] <= 0.0:
-                continue
-            width = m["max_sat"] / self.N_BINS
-            for b in range(self.N_BINS):
-                if (b + 1) * width >= thr:
-                    kept += int(m["bins"][b])
-        return total, kept
 
     def _live(self, df: DataFrame) -> DataFrame:
         """Live-docs filter (Lucene90LiveDocsFormat analog): anti-join the
@@ -679,14 +636,7 @@ class IndexSearcher:
             return blocks.mapInPandas(
                 _decode_blocks_with_positions, schema=_DECODE_POS_SCHEMA
             )
-        cols = [
-            "term",
-            "first_doc",
-            "doc_gaps",
-            "freqs",
-            "norms",
-        ]
-        return blocks.select(cols).mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
+        return _decode(blocks)
 
     # -------------------------------------------------------------- scoring
 
@@ -1378,14 +1328,17 @@ class IndexSearcher:
     # ------------------------------------------------- block-max pruned top-k
 
     def _term_topk_pruned(self, q: Q.TermQuery, k: int) -> DataFrame:
-        """Single-term two-phase block-max pruning (WAND family:
-        ``search/WANDScorer.java:32-55``, ``MaxScoreCache.java:59-140``).
+        """Single-term two-phase block-max pruning, as one plan (WAND
+        family: ``search/WANDScorer.java:32-55``,
+        ``MaxScoreCache.java:59-140``).
 
-        Phase 1 decodes only the ceil(4k/256) highest-upper-bound blocks and
-        collects the running k-th score theta; phase 2 decodes just the
-        remaining blocks whose (max_freq, min_norm) upper bound can still
-        beat theta. Sound because the per-block bound dominates every score
-        inside the block (BM25 is monotone in freq and 1/norm).
+        Phase 1 decodes only the few highest-upper-bound blocks and takes
+        their k-th score theta in-plan; phase 2 decodes just the remaining
+        blocks whose competitive-impact upper bound can still reach theta.
+        Sound because the per-block bound dominates every score inside the
+        block (BM25 is monotone in freq and 1/norm). With
+        ``collect_prune_stats`` on, count jobs over the same frames fill
+        ``last_prune_stats``; the returned plan is unchanged.
         """
         ctx = self._resolve_stats(q)
         field = q.field
@@ -1423,7 +1376,6 @@ class IndexSearcher:
             math.ceil((4 * k) / forutil.BLOCK_SIZE),
         )
         meta = self._block_meta.get((field, q.term))
-        key = F.concat_ws("#", F.col("seg_id"), F.col("block_ord"))
         if meta is not None and (
             len(meta["anchors"]) >= n_phase1
             or len(meta["anchors"]) >= meta["n_blocks"]
@@ -1431,73 +1383,33 @@ class IndexSearcher:
             # serving layout: anchors preloaded (impact order is
             # weight-independent), the metadata job disappears
             p1_keys = meta["anchors"][:n_phase1]
-            phase1 = blocks.filter(
-                key.isin([f"{s}#{b}" for s, b in p1_keys])
-            )
         else:
-            # deterministic tie-break: the phase-1 set is evaluated by TWO
-            # jobs (key collect + decode) — equal upper bounds must not let
-            # them pick different blocks, or an excluded-but-undecoded
-            # block's docs would silently vanish from the union below
-            phase1 = blocks.orderBy(
-                F.col("_ub").desc(), F.col("seg_id").asc(), F.col("block_ord").asc()
-            ).limit(n_phase1)
+            # deterministic tie-break, so equal upper bounds always pick
+            # the same anchor blocks
             p1_keys = [
                 (r["seg_id"], r["block_ord"])
-                for r in phase1.select("seg_id", "block_ord").collect()
+                for r in blocks.orderBy(
+                    F.col("_ub").desc(), F.col("seg_id").asc(), F.col("block_ord").asc()
+                )
+                .limit(n_phase1)
+                .select("seg_id", "block_ord")
+                .collect()
             ]
-        decode_cols = ["term", "first_doc", "doc_gaps", "freqs", "norms"]
-        scored1 = (
-            phase1.select(decode_cols)
-            .mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
-            .select(
-                "doc_id",
-                self._score_col(field, F.col("freq"), F.col("norm"), w).alias("score"),
-            )
-        )
-        top1 = scored1.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
         key = F.concat_ws("#", F.col("seg_id"), F.col("block_ord"))
         p1_set = [f"{s}#{b}" for s, b in p1_keys]
-        if self.collect_prune_stats:
-            # observable two-job path: theta and the block counters come
-            # back to the driver so last_prune_stats can report them
-            rows = top1.collect()
-            if len(rows) < k:
-                return self._scored(q, F32(1.0), ctx)  # not enough hits to prune
-            theta = rows[-1]["score"]
-            remaining = blocks.filter(
-                (F.col("_ub") >= F.lit(float(theta)).cast("float"))
-                & ~key.isin(p1_set)
-            )
-            self.last_prune_stats = {
-                "total_blocks": blocks.count(),
-                "phase1_blocks": len(p1_keys),
-                "kept_blocks": remaining.count(),
-                "rescore_blocks": 0,
-            }
-            scored2 = (
-                remaining.select(decode_cols)
-                .mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
-                .select(
-                    "doc_id",
-                    self._score_col(field, F.col("freq"), F.col("norm"), w).alias(
-                        "score"
-                    ),
-                )
-            )
-            spark = self.index.docs.sparkSession
-            top1_df = spark.createDataFrame(
-                [(int(r["doc_id"]), float(r["score"])) for r in rows],
-                schema="doc_id long, score double",
-            ).select("doc_id", F.col("score").cast("float").alias("score"))
-            return top1_df.unionByName(scored2)
-        # serving path: theta stays IN-PLAN — the k-th phase-1 score is a
-        # broadcast scalar, so the whole pruned term query is ONE Spark
-        # job (with preloaded anchors there is no planning job either).
+        score = self._score_col(field, F.col("freq"), F.col("norm"), w).alias("score")
+        top1 = (
+            _decode(blocks.filter(key.isin(p1_set)))
+            .select("doc_id", score)
+            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+            .limit(k)
+        )
+        # theta stays IN-PLAN — the k-th phase-1 score is a broadcast
+        # scalar, so the whole pruned term query is ONE Spark job (with
+        # preloaded anchors there is no planning job either).
         # Under-filled anchors (fewer than k phase-1 hits) degrade theta
         # to -inf in-plan: phase 2 then keeps every non-anchor block and
-        # the union equals the unpruned full decode — same results the
-        # driver-side fallback would produce, without a branch barrier.
+        # the union equals the unpruned full decode.
         th = top1.agg(
             F.when(F.count("*") >= F.lit(k), F.min("score"))
             .otherwise(F.lit(float("-inf")))
@@ -1507,42 +1419,48 @@ class IndexSearcher:
         remaining = blocks.crossJoin(F.broadcast(th)).filter(
             (F.col("_ub") >= F.col("_theta")) & ~key.isin(p1_set)
         )
-        scored2 = (
-            remaining.select(decode_cols)
-            .mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
-            .select(
-                "doc_id",
-                self._score_col(field, F.col("freq"), F.col("norm"), w).alias("score"),
-            )
-        )
-        return top1.unionByName(scored2)
+        if self.collect_prune_stats:
+            self.last_prune_stats = {
+                "total_blocks": blocks.count(),
+                "phase1_blocks": len(p1_keys),
+                "kept_blocks": remaining.count(),
+                "rescore_blocks": 0,
+            }
+        return top1.unionByName(_decode(remaining).select("doc_id", score))
 
     def _disjunction_topk_pruned(
         self, clauses: list[Q.TermQuery], mode_tie: float | None, k: int
     ) -> DataFrame:
-        """MAXSCORE-family pruning for scored disjunctions
+        """MAXSCORE pruning for scored disjunctions
         (``search/MaxScoreBulkScorer.java:28-70``, selection in
         ``BooleanScorerSupplier.java:288-318``).
 
         mode_tie None  -> SHOULD-sum scoring (DisjunctionSumScorer)
         mode_tie float -> dismax: max + tie * (sum - max)
 
-        Three phases over the block metadata table (never decoding what the
-        bounds rule out):
+        1. theta: the strongest clause's top-impact blocks yield k anchor
+           docs; every clause is probed at just those docs, and the k-th
+           of their exact combined scores is a sound threshold.
+        2. essential split: clauses sorted by global max bound ascending;
+           the non-essential set N is the longest prefix whose COMBINED
+           upper bound stays below theta (sum for SHOULD-sum; max +
+           tie*(sum-max) for dismax). A doc matching only N clauses
+           scores <= bound(N) < theta, so:
 
-        1. theta: decode the few highest-upper-bound blocks across all
-           clauses; per-doc PARTIAL combination is a lower bound of the true
-           score (more clauses only add), so the k-th partial is a sound
-           threshold.
-        2. keep block b of clause c iff ub_c(b) + B_c >= theta, where
-           B_c bounds every other clause's contribution (sum of their max
-           block bounds; tie-scaled for dismax). For any doc all of whose
-           blocks are pruned, score <= min_c [ub_c(block) + B_c] < theta —
-           it can never enter the top-k.
-        3. exact rescore: candidates = docs in kept blocks (a superset of
-           the true top-k by step 2); decode every clause block whose
-           [first_doc, last_doc] span contains a candidate (recovers the
-           contributions a pruned block would hide) and combine exactly.
+           - essential clauses decode fully into per-doc exact partials
+             (e_sum, e_max);
+           - candidates = docs whose partial + bound(N) clears theta
+             (both combiners are monotone per clause, so the bound is
+             sound);
+           - N's blocks decode only where their [first_doc, last_doc]
+             span holds a candidate; the final combine is exact (each
+             addend is a float32 value, so double accumulation is exact
+             regardless of grouping — bit-identical to the one-shot sum).
+
+        Falls back to the plain one-shuffle disjunction when no clause
+        demotes (``nosplit``: theta below every clause bound) or more
+        candidates clear the bound than the budget allows (``cap``, see
+        ``MAX_CANDIDATES``).
         """
         field = clauses[0].field
         fs = self.index.fieldstats[field]
@@ -1571,42 +1489,41 @@ class IndexSearcher:
         if total_df <= max(4 * k, self.prune_min_df):
             return fallback
 
-        def gate_skip(est_rows: int) -> DataFrame:
+        def fall_back(strategy: str, **stats) -> DataFrame:
             if self.collect_prune_stats:
                 self.last_prune_stats = {
-                    "total_blocks": -(-total_df // forutil.BLOCK_SIZE),
-                    "phase1_blocks": 0,
-                    "kept_blocks": 0,
                     "rescore_blocks": 0,
+                    **stats,
                     "fell_back": True,
-                    "strategy": "engage_gate",
-                    "est_demotable_rows": est_rows,
-                    "gate_rows": self.prune_engage_min_rows,
+                    "strategy": strategy,
                 }
             return fallback
 
-        # engagement gate, coarse: the ladder can never avoid decoding
-        # more rows than exist across all clauses. Below the gate the ~4
-        # sequential job barriers (anchor decode, probe, split planning,
-        # completion) cost more than the decode they could save — go
-        # straight to the plain one-shuffle disjunction. Zero jobs: df
-        # comes from the driver stats memo.
+        def gate_skip(est_rows: int) -> DataFrame:
+            return fall_back(
+                "engage_gate",
+                total_blocks=-(-total_df // forutil.BLOCK_SIZE),
+                phase1_blocks=0,
+                est_demotable_rows=est_rows,
+                gate_rows=self.prune_engage_min_rows,
+            )
+
+        # engagement gate, coarse: pruning can never avoid decoding more
+        # rows than exist across all clauses. Below the gate the extra
+        # sequential job barriers (anchor probe, candidate collect) cost
+        # more than the decode they could save — go straight to the plain
+        # one-shuffle disjunction. Zero jobs: df comes from the driver
+        # stats memo.
         if total_df < self.prune_engage_min_rows:
             return gate_skip(total_df)
 
         terms = [c.term for c in clauses]
-        # weight lookup as a literal CASE chain — stays in codegen
-        w_col = F.lit(None).cast("float")
-        for t, wv in weights.items():
-            w_col = F.when(F.col("term") == t, F.lit(wv).cast("float")).otherwise(
-                w_col
-            )
+        w_col = _by_term(weights)
         # a filter over the (persisted) postings cache — cheap to recompute,
         # no persist needed
         blocks = self._blocks(field, F.col("term").isin(terms)).withColumn(
             "_ub", self._block_ub(field, w_col)
         )
-        decode_cols = ["term", "first_doc", "doc_gaps", "freqs", "norms"]
         # anchor width: with competitive-impact bounds a block's _ub IS its
         # true max score, so the global top-k docs live in the top-ub
         # blocks — k impact-ordered blocks (one could hold each top doc)
@@ -1646,39 +1563,33 @@ class IndexSearcher:
                     (r["seg_id"], r["block_ord"])
                 )
         if len(maxub) < 2:
-            return fallback  # degenerate: <=1 clause has postings
-        s_all = sum(maxub.values())
+            return fall_back("few_clauses")  # <=1 clause has postings
         # engagement gate, refined: MAXSCORE never demotes the strongest
         # clause (it stays essential at any theta), so the avoidable rows
         # are at most the OTHER clauses' postings. With preloaded metadata
         # this refinement is still zero jobs; without, the one metadata
         # job above is already paid either way.
-        strongest_t = max(maxub, key=lambda t: maxub[t])
-        demotable = total_df - dfs.get(strongest_t, 0)
+        strongest = max(maxub, key=lambda t: maxub[t])
+        demotable = total_df - dfs.get(strongest, 0)
         if demotable < self.prune_engage_min_rows:
             return gate_skip(demotable)
 
-        def combine(decoded: DataFrame) -> DataFrame:
-            per = decoded.select(
-                "doc_id",
-                self._score_col(field, F.col("freq"), F.col("norm"), w_col).alias(
-                    "s"
-                ),
+        tie = None if mode_tie is None else float(F32(mode_tie))
+        s_col = self._score_col(field, F.col("freq"), F.col("norm"), w_col).alias("s")
+
+        def sum_max(decoded: DataFrame, sm: str, mx: str) -> DataFrame:
+            """Per-doc double sum and float max of the clause scores."""
+            return (
+                decoded.select("doc_id", s_col)
+                .groupBy("doc_id")
+                .agg(F.sum(F.col("s").cast("double")).alias(sm), F.max("s").alias(mx))
             )
-            if mode_tie is None:
-                return per.groupBy("doc_id").agg(
-                    F.sum(F.col("s").cast("double")).cast("float").alias("score")
-                )
-            tie = float(F32(mode_tie))
-            agg = per.groupBy("doc_id").agg(
-                F.max("s").alias("mx"),
-                F.sum(F.col("s").cast("double")).alias("sm"),
-            )
-            expr = (
-                F.col("mx").cast("double")
-                + F.lit(tie) * (F.col("sm") - F.col("mx").cast("double"))
-            ).cast("float")
-            return agg.select("doc_id", expr.alias("score"))
+
+        def combined(sm: Column, mx: Column) -> Column:
+            """float32 disjunction score from a double sum and max."""
+            if tie is None:
+                return sm.cast("float")
+            return (mx + F.lit(tie) * (sm - mx)).cast("float")
 
         # phase 1 (theta): the STRONGEST clause's top-impact blocks yield k
         # anchor docs; probing EVERY clause at just those docs (the blocks
@@ -1691,32 +1602,20 @@ class IndexSearcher:
         # isolation instead puts theta below every clause bound — blocks
         # of different clauses rarely share a doc window — and no split
         # could ever engage.)
-        strongest = max(maxub, key=lambda t: maxub[t])
         key = F.concat_ws("#", F.col("seg_id"), F.col("block_ord"))
         a_keys = [
             f"{s}#{b}" for s, b in anchors_by_term.get(strongest, [])[:n_phase1]
         ]
-        anchor_sc = (
-            blocks.filter((F.col("term") == strongest) & key.isin(a_keys))
-            .select(decode_cols)
-            .mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
-            .select(
-                "doc_id",
-                self._score_col(field, F.col("freq"), F.col("norm"), w_col).alias(
-                    "s"
-                ),
-            )
-        )
         # the k anchor docs stay IN-PLAN (sort + limit behind broadcast
         # joins) instead of round-tripping through the driver: theta then
-        # costs ONE Spark job barrier, not two — phase latency, not decode
-        # volume, is what bounds pruned-path wall time at serving scale
-        # (BENCH.md hot-OR analysis). The tiny limit-k side broadcasts;
-        # both joins share the identical subplan, so exchange reuse (or at
-        # worst a second <=16-block decode inside the same job) covers the
-        # recompute.
+        # costs ONE Spark job barrier, not two. The tiny limit-k side
+        # broadcasts; both joins share the identical subplan, so exchange
+        # reuse (or at worst a second <=16-block decode inside the same
+        # job) covers the recompute.
         anchor_top = (
-            anchor_sc.orderBy(F.col("s").desc(), F.col("doc_id").asc())
+            _decode(blocks.filter((F.col("term") == strongest) & key.isin(a_keys)))
+            .select("doc_id", s_col)
+            .orderBy(F.col("s").desc(), F.col("doc_id").asc())
             .limit(k)
             .select("doc_id")
         )
@@ -1726,351 +1625,74 @@ class IndexSearcher:
             & (F.col("doc_id") <= F.col("last_doc")),
             "left_semi",
         )
-        # phase-1 decode cost actually paid: the strongest clause's anchor
-        # blocks plus every clause's probe blocks (count job only when
-        # stats collection is on)
-        p1_blocks = len(a_keys) + (
-            probe.count() if self.collect_prune_stats else 0
-        )
-        exact0 = combine(
-            probe.select(decode_cols)
-            .mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
-            .join(F.broadcast(anchor_top), "doc_id", "left_semi")
+        exact0 = sum_max(
+            _decode(probe).join(F.broadcast(anchor_top), "doc_id", "left_semi"),
+            "sm",
+            "mx",
+        ).select(
+            "doc_id",
+            combined(F.col("sm"), F.col("mx").cast("double")).alias("score"),
         )
         rows = (
             exact0.orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .limit(k)
             .collect()
         )
+        stats: dict = {}
+        if self.collect_prune_stats:
+            # phase-1 decode cost actually paid: the strongest clause's
+            # anchor blocks plus every clause's probe blocks
+            stats = {
+                "total_blocks": blocks.count(),
+                "phase1_blocks": len(a_keys) + probe.count(),
+                "preloaded": pre_ok,
+            }
         if len(rows) < k:
-            # fewer than k exact anchor scores — covers the old
-            # "len(anchor_ids) < k" fallback too (combine over the anchor
-            # semi-join yields exactly one row per anchor doc)
-            return fallback
+            # fewer than k exact anchor scores (one row per anchor doc)
+            return fall_back("few_anchors", **stats)
         theta = float(rows[-1]["score"])
 
-        # keep rule: ub_c(b) + bound(other clauses) >= theta
-        if mode_tie is None:
-            other_bound = {t: s_all - maxub[t] for t in maxub}
-        else:
-            tie = float(F32(mode_tie))
-            other_bound = {t: tie * (s_all - maxub[t]) for t in maxub}
-        ob_col = F.lit(0.0)
-        for t, ov in other_bound.items():
-            ob_col = F.when(F.col("term") == t, F.lit(ov)).otherwise(ob_col)
-        # float32 compare: the final combined score is fl32-rounded, and a
-        # double bound half an ulp under theta can round up to tie it
-        kept_pred = (F.col("_ub").cast("double") + ob_col).cast("float") >= F.lit(
-            theta
-        )
-
-        def guard_counts() -> tuple[int, int]:
-            row = blocks.agg(
-                F.count("*").alias("t"),
-                F.sum(F.when(kept_pred, 1).otherwise(0)).alias("kp"),
-            ).collect()[0]
-            return int(row["t"]), int(row["kp"] or 0)
-
-        stats_counts = guard_counts() if self.collect_prune_stats else None
-        # strategy choice (the BooleanScorerSupplier role,
-        # BooleanScorerSupplier.java:288-318): prefer the MAXSCORE
-        # essential/non-essential split — the reference's pick — whenever
-        # theta demotes at least one clause; it handles both selective
-        # shapes (strongest clause is small) and hot shapes (weak stopword
-        # clauses probed, not iterated). The block-level candidate-superset
-        # rescore below covers what's left, guarded by the keep-rule
-        # fraction.
-        stats_base = {
-            "total_blocks": stats_counts[0] if stats_counts else -1,
-            "phase1_blocks": p1_blocks,
-            "kept_blocks": stats_counts[1] if stats_counts else -1,
-            "preloaded": pre_ok,
-        }
-        out = self._disjunction_topk_essential(
-            field,
-            weights,
-            maxub,
-            theta,
-            mode_tie,
-            k,
-            blocks,
-            decode_cols,
-            stats_base=stats_base,
-        )
-        windowed_skip: str | None = None
-        if out is None and self._essential_fail_reason != "cap":
-            # global bounds defeated by norm/tf variance (one short
-            # stopword-heavy doc anywhere lifts a clause's global bound
-            # above any theta) — re-partition essential sets per doc-id
-            # WINDOW, the reference's actual loop structure
-            # (MaxScoreBulkScorer.java:26-70). Skipped when the global
-            # split failed on the CANDIDATE budget: theta and the near-
-            # identical per-window bounds produce the same flat candidate
-            # set, so the retry would pay its planning jobs and fail the
-            # same way. Also skipped when the preloaded bound histograms
-            # prove the clause bounds FLAT (uniformly-hot pairs): no
-            # window could demote anything, so the retry's planning job
-            # is pure loss on the way to the same fallback.
-            if self._windowed_split_promising(
-                field, weights, maxub, theta, mode_tie
-            ):
-                out = self._disjunction_topk_windowed(
-                    field,
-                    weights,
-                    theta,
-                    mode_tie,
-                    k,
-                    blocks,
-                    decode_cols,
-                    stats_base=stats_base,
-                )
-            else:
-                windowed_skip = "flat_hist"
-        if out is not None:
-            return out
-        if stats_counts is not None:
-            total_blocks, kept_cnt = stats_counts
-        else:
-            # keep threshold per clause in weight=1 (sat) units for the
-            # histogram estimate: kept iff w*sat + other_bound >= theta
-            est = self._kept_estimate(
-                field,
-                {
-                    t: (theta - other_bound[t]) / weights[t]
-                    for t in terms
-                    if weights[t] > 0.0
-                },
-            )
-            total_blocks, kept_cnt = est if est is not None else guard_counts()
-        kept = blocks.filter(kept_pred)
-        if kept_cnt > self.prune_keep_frac * total_blocks:
-            if self.collect_prune_stats:
-                self.last_prune_stats = {
-                    "total_blocks": total_blocks,
-                    "phase1_blocks": p1_blocks,
-                    "kept_blocks": kept_cnt,
-                    "rescore_blocks": 0,
-                    "fell_back": True,
-                    "preloaded": pre_ok,
-                    **({"windowed": windowed_skip} if windowed_skip else {}),
-                }
-            return fallback
-        # candidate docs: superset of the true top-k (step 2 of docstring).
-        # The count is bounded by the guard below, so the ids come back to
-        # the driver and re-enter the plan as a LOCAL relation — the two
-        # broadcast joins then ship ready bytes instead of re-running the
-        # decode inside the broadcast-exchange thread (which can blow
-        # spark.sql.broadcastTimeout under cache eviction/contention).
-        cand_ids = [
-            int(r["doc_id"])
-            for r in kept.select(decode_cols)
-            .mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
-            .select("doc_id")
-            .distinct()
-            .limit(max(self.prune_max_candidates, 64 * k) + 1)
-            .collect()
-        ]
-        if len(cand_ids) > max(self.prune_max_candidates, 64 * k):
-            # candidate superset too large to broadcast-rescore profitably
-            if self.collect_prune_stats:
-                self.last_prune_stats = {
-                    "total_blocks": total_blocks,
-                    "phase1_blocks": p1_blocks,
-                    "kept_blocks": kept_cnt,
-                    "rescore_blocks": 0,
-                    "fell_back": True,
-                    "preloaded": pre_ok,
-                }
-            return fallback
-        spark = self.index.docs.sparkSession
-        cand = spark.createDataFrame(
-            [(x,) for x in cand_ids], schema="doc_id long"
-        )
-        # exact rescore: every block whose doc span holds a candidate
-        needed = blocks.join(
-            F.broadcast(cand),
-            (F.col("doc_id") >= F.col("first_doc"))
-            & (F.col("doc_id") <= F.col("last_doc")),
-            "left_semi",
-        )
-        if self.collect_prune_stats:
-            self.last_prune_stats = {
-                "total_blocks": total_blocks,
-                "phase1_blocks": p1_blocks,
-                "kept_blocks": kept_cnt,
-                "rescore_blocks": needed.count(),
-                "fell_back": False,
-            }
-        exact = combine(
-            needed.select(decode_cols).mapInPandas(
-                _decode_blocks, schema=_DECODE_SCHEMA
-            )
-        )
-        return exact.join(F.broadcast(cand), "doc_id", "left_semi")
-
-    def _disjunction_topk_essential(
-        self,
-        field: str,
-        weights: dict[str, float],
-        maxub: dict[str, float],
-        theta: float,
-        mode_tie: float | None,
-        k: int,
-        blocks: DataFrame,
-        decode_cols: list[str],
-        stats_base: dict[str, int],
-    ) -> DataFrame | None:
-        """MAXSCORE essential/non-essential pruning for NON-selective
-        disjunctions (``search/MaxScoreBulkScorer.java:28-70`` — the shape
-        where the block-level keep rule retains everything because theta
-        sits below most block upper bounds, yet whole clauses can still be
-        demoted from "iterate fully" to "probe at candidates").
-
-        Clauses sorted by global max bound ascending; the non-essential
-        set N is the longest prefix whose COMBINED upper bound stays below
-        theta (sum for SHOULD-sum; max + tie*(sum-max) for dismax). Then:
-
-        - a doc matching only N clauses scores <= bound(N) < theta — its
-          postings are NEVER decoded (the 100 TB win: an OR of a stopword
-          term with a strong term decodes only the strong side fully);
-        - essential clauses decode fully (the fallback would decode them
-          anyway) into per-doc exact partials (e_sum, e_max);
-        - candidates = docs whose exact-essential partial + bound(N)
-          clears theta (both combiners are monotone per clause, so the
-          bound is sound); everything else is discarded before any
-          non-essential I/O;
-        - non-essential blocks decode only where their [first_doc,
-          last_doc] span holds a candidate; the final combine is exact
-          (each addend is a float32 value, so double accumulation is
-          exact regardless of grouping — bit-identical to the one-shot
-          sum).
-
-        Returns None when no essential split exists (theta below every
-        clause bound) or the candidate set exceeds the broadcast budget —
-        the caller then takes the plain one-shuffle disjunction.
-        ``self._essential_fail_reason`` records which ("nosplit" | "cap")
-        so the caller knows whether the windowed retry can still help.
-        """
-        self._essential_fail_reason = None
-        tie = float(F32(mode_tie)) if mode_tie is not None else None
-
-        def comb(ms: list[float]) -> float:
-            if not ms:
-                return 0.0
+        # essential split: the longest weakest-first prefix whose combined
+        # bound stays under theta is non-essential (>= 1 clause essential)
+        def bound(ms: list[float]) -> float:
             if tie is None:
                 return sum(ms)
-            mx = max(ms)
-            return mx + tie * (sum(ms) - mx)
+            return max(ms) + tie * (sum(ms) - max(ms))
 
         order = sorted(maxub, key=lambda t: (maxub[t], t))
         ne: list[str] = []
-        for t in order[:-1]:  # keep >= 1 essential clause
-            if comb([maxub[x] for x in ne] + [maxub[t]]) < theta:
+        for t in order[:-1]:
+            if bound([maxub[x] for x in ne] + [maxub[t]]) < theta:
                 ne.append(t)
             else:
                 break
         if not ne:
-            self._essential_fail_reason = "nosplit"
-            return None
+            return fall_back("nosplit", **stats)
         ess = [t for t in order if t not in ne]
-        ne_sum = sum(maxub[t] for t in ne)
-        ne_max = max(maxub[t] for t in ne)
-
-        w_col = F.lit(None).cast("float")
-        for t, wv in weights.items():
-            w_col = F.when(F.col("term") == t, F.lit(wv).cast("float")).otherwise(
-                w_col
-            )
         e_blocks = blocks.filter(F.col("term").isin(ess))
-        e_per = (
-            e_blocks.select(decode_cols)
-            .mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
-            .select(
-                "doc_id",
-                self._score_col(field, F.col("freq"), F.col("norm"), w_col).alias(
-                    "s"
-                ),
-            )
+        e_agg = sum_max(_decode(e_blocks), "e_sum", "e_max")
+        ub = combined(
+            F.col("e_sum") + F.lit(sum(maxub[t] for t in ne)),
+            F.greatest(
+                F.col("e_max").cast("double"), F.lit(max(maxub[t] for t in ne))
+            ),
         )
-        e_agg = e_per.groupBy("doc_id").agg(
-            F.sum(F.col("s").cast("double")).alias("e_sum"),
-            F.max("s").alias("e_max"),
-        )
-        if tie is None:
-            ub = F.col("e_sum") + F.lit(ne_sum)
-        else:
-            mxc = F.greatest(F.col("e_max").cast("double"), F.lit(ne_max))
-            smc = F.col("e_sum") + F.lit(ne_sum)
-            ub = mxc + F.lit(tie) * (smc - mxc)
-        cap = min(self.prune_max_candidates, max(self.essential_max_candidates, 64 * k))
-        # compare in float32: the final score is fl32(e_sum + n_sum), and a
-        # double ub within half a float32-ulp below theta can round UP to
-        # exactly theta — fl32 is monotonic, so fl32(ub) >= fl32(true sum)
-        # keeps every doc whose rounded score ties theta
-        # persist the essential partials: the candidate filter reads them
-        # now, and on cap overflow the COMPLETION branch below reuses them
-        # instead of throwing the decode away (success unpersists at once)
-        e_agg = e_agg.persist()
+        cap = min(self.MAX_CANDIDATES, max(16_384, 64 * k))
+        # compared in float32: the final score is fl32(e_sum + n_sum), and
+        # a double ub within half a float32-ulp below theta can round UP
+        # to exactly theta — fl32 is monotonic, so fl32(ub) >= fl32(true
+        # sum) keeps every doc whose rounded score ties theta
         cand_rows = (
-            e_agg.filter(ub.cast("float") >= F.lit(theta))
+            e_agg.filter(ub >= F.lit(theta))
             .select("doc_id", "e_sum", "e_max")
             .limit(cap + 1)
             .collect()
         )
+        if self.collect_prune_stats:
+            stats["essential_blocks"] = e_blocks.count()
+            stats["n_candidates"] = len(cand_rows)
         if len(cand_rows) > cap:
-            self._essential_fail_reason = "cap"
-            # EXACT COMPLETION: the flat-score shape (a large fraction of
-            # docs within a whisker of theta) used to discard the already-
-            # executed essential decode and fall back to a FULL re-decode —
-            # 2x the postings I/O of the plain disjunction on exactly the
-            # hottest queries. Instead, finish the job: decode ONLY the
-            # non-essential clauses' blocks and combine with the persisted
-            # essential partials (full outer — a doc may hold only ne or
-            # only ess clauses). Total postings decoded = the plain path's,
-            # once. Bit-identical: every per-(doc,term) float32 addend is
-            # exact in double and clause counts are small, so the split
-            # double sums equal the one-shot double sum.
-            n_per_all = (
-                blocks.filter(F.col("term").isin(ne))
-                .select(decode_cols)
-                .mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
-                .select(
-                    "doc_id",
-                    self._score_col(
-                        field, F.col("freq"), F.col("norm"), w_col
-                    ).alias("s"),
-                )
-            )
-            n_agg_all = n_per_all.groupBy("doc_id").agg(
-                F.sum(F.col("s").cast("double")).alias("n_sum"),
-                F.max("s").alias("n_max"),
-            )
-            joined = e_agg.join(n_agg_all, "doc_id", "full_outer")
-            sm = F.coalesce(F.col("e_sum"), F.lit(0.0)) + F.coalesce(
-                F.col("n_sum"), F.lit(0.0)
-            )
-            if tie is None:
-                score = sm.cast("float")
-            else:
-                mx = F.greatest(
-                    F.coalesce(F.col("e_max").cast("double"), F.lit(0.0)),
-                    F.coalesce(F.col("n_max").cast("double"), F.lit(0.0)),
-                )
-                score = (mx + F.lit(tie) * (sm - mx)).cast("float")
-            if self.collect_prune_stats:
-                self.last_prune_stats = {
-                    **stats_base,
-                    "essential_blocks": e_blocks.count(),
-                    "rescore_blocks": -1,
-                    "n_candidates": len(cand_rows),
-                    "fell_back": False,
-                    "strategy": "essential_completion",
-                }
-            # the returned plan references the persisted partials; drained
-            # at the next search()/search_many() entry
-            self._deferred_unpersist.append(e_agg)
-            return joined.select("doc_id", score.alias("score"))
-        e_agg.unpersist()  # success: the collected cand rows carry the partials
+            return fall_back("cap", **stats)
         spark = self.index.docs.sparkSession
         cand = spark.createDataFrame(
             [
@@ -2079,296 +1701,32 @@ class IndexSearcher:
             ],
             schema="doc_id long, e_sum double, e_max float",
         )
-        n_blocks = blocks.filter(F.col("term").isin(ne))
-        needed = n_blocks.join(
-            F.broadcast(cand.select("doc_id")),
+        cand_ids = F.broadcast(cand.select("doc_id"))
+        needed = blocks.filter(F.col("term").isin(ne)).join(
+            cand_ids,
             (F.col("doc_id") >= F.col("first_doc"))
             & (F.col("doc_id") <= F.col("last_doc")),
             "left_semi",
         )
         if self.collect_prune_stats:
             self.last_prune_stats = {
-                **stats_base,
-                "essential_blocks": e_blocks.count(),
+                **stats,
                 "rescore_blocks": needed.count(),
-                "n_candidates": len(cand_rows),
                 "fell_back": False,
                 "strategy": "maxscore_essential",
             }
-        n_per = (
-            needed.select(decode_cols)
-            .mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
-            .join(F.broadcast(cand.select("doc_id")), "doc_id", "left_semi")
-            .select(
-                "doc_id",
-                self._score_col(field, F.col("freq"), F.col("norm"), w_col).alias(
-                    "s"
-                ),
-            )
+        n_agg = sum_max(
+            _decode(needed).join(cand_ids, "doc_id", "left_semi"), "n_sum", "n_max"
         )
-        n_agg = n_per.groupBy("doc_id").agg(
-            F.sum(F.col("s").cast("double")).alias("n_sum"),
-            F.max("s").alias("n_max"),
-        )
-        joined = cand.join(n_agg, "doc_id", "left")
-        sm = F.col("e_sum") + F.coalesce(F.col("n_sum"), F.lit(0.0))
-        if tie is None:
-            score = sm.cast("float")
-        else:
-            # BM25 scores are > 0, so 0 is neutral for the max
-            mx = F.greatest(
+        # BM25 scores are > 0, so 0 is neutral for the max
+        score = combined(
+            F.col("e_sum") + F.coalesce(F.col("n_sum"), F.lit(0.0)),
+            F.greatest(
                 F.col("e_max").cast("double"),
                 F.coalesce(F.col("n_max").cast("double"), F.lit(0.0)),
-            )
-            score = (mx + F.lit(tie) * (sm - mx)).cast("float")
-        return joined.select("doc_id", score.alias("score"))
-
-    def _windowed_split_promising(
-        self,
-        field: str,
-        weights: dict[str, float],
-        maxub: dict[str, float],
-        theta: float,
-        mode_tie: float | None,
-    ) -> bool:
-        """Zero-job cost guard for the windowed retry, driver-side from the
-        preloaded block-bound histograms (``preload_block_meta``).
-
-        Per-window MAXSCORE beats the global split only when some clause's
-        GLOBAL max bound is an OUTLIER of its per-block bound distribution
-        (one freak short high-tf doc): most windows then see the far lower
-        typical bound and demote the clause. Test: re-run the essential-
-        split engagement check with each clause's p95 block bound in place
-        of its max — engagement at p95 means typical windows can demote
-        the weakest clause, so the retry is worth its planning job.
-        Failure even at p95 is the uniformly-hot shape (stopword pairs:
-        bound mass concentrated at the top bins, exactly what
-        ``MaxScoreBulkScorer`` cannot prune either) — skip the retry and
-        fall straight back to the one-shuffle disjunction.
-
-        COST decision only: the fallback is exact either way; a wrong
-        guess here wastes or saves one metadata planning job, never
-        changes results. Returns True (keep the retry) whenever any
-        clause lacks preloaded histograms — no evidence, no skip."""
-        q: dict[str, float] = {}
-        for t in maxub:
-            m = self._block_meta.get((field, t))
-            if m is None:
-                return True
-            tot = int(m["bins"].sum())
-            w = weights.get(t, 0.0)
-            if tot <= 0 or m["max_sat"] <= 0.0 or w <= 0.0:
-                q[t] = maxub[t]
-                continue
-            # p95 block bound via the bin UPPER edge — over-estimates, so
-            # the guard can only err toward KEEPING the retry
-            edge = int(np.searchsorted(np.cumsum(m["bins"]), 0.95 * tot))
-            q[t] = (
-                w * (min(edge, self.N_BINS - 1) + 1) / self.N_BINS * m["max_sat"]
-            )
-        if len(q) < 2:
-            return False  # degenerate: nothing to demote
-        # engagement check mirrors _disjunction_topk_essential: the split
-        # exists iff the WEAKEST clause's combined solo bound clears under
-        # theta (comb of a single element is the element for both sum and
-        # dismax combiners)
-        return min(q.values()) < theta
-
-    def _disjunction_topk_windowed(
-        self,
-        field: str,
-        weights: dict[str, float],
-        theta: float,
-        mode_tie: float | None,
-        k: int,
-        blocks: DataFrame,
-        decode_cols: list[str],
-        stats_base: dict[str, int],
-    ) -> DataFrame | None:
-        """Per-WINDOW MAXSCORE essential sets — the reference's actual loop
-        (``search/MaxScoreBulkScorer.java:26-70``, ``INNER_WINDOW_SIZE``
-        at ``:28``): global clause bounds are defeated by norm/tf variance
-        (one short stopword-heavy doc anywhere lifts a clause's global max
-        above any reachable theta), but within a 4096-doc window the local
-        block maxima are modest and the weak clause demotes almost
-        everywhere.
-
-        All planning is DataFrame algebra over BLOCK METADATA (term,
-        block span, block-max upper bound) — no postings decode and no
-        driver materialization, so it scales to hot terms whose metadata
-        alone is millions of rows:
-
-        1. ``wub(w, t)`` = max block bound of clause t over window w
-           (blocks explode to the 1-2 windows their span overlaps);
-        2. within each window, clauses sort by wub ascending and the
-           longest prefix whose running combined bound stays under theta
-           is NON-essential there (the predicate is monotone along the
-           sort, so the prefix property is free);
-        3. a block decodes iff its clause is essential in >= 1 window it
-           overlaps; decoded rows count toward a doc's exact partial only
-           when the clause is essential in the DOC'S OWN window;
-        4. candidates = docs whose partial + the window's non-essential
-           bound clears theta (docs with no essential postings in their
-           window are ruled out by construction: the full non-essential
-           combined bound is < theta there);
-        5. exact rescore decodes only candidate-holding blocks, adding
-           the contributions step 3 excluded (clause non-essential in the
-           doc's window) — disjoint and exhaustive vs the partial, and
-           float32 addends accumulate exactly in doubles, so the result
-           is bit-identical to the one-shot disjunction.
-
-        Returns None when the split drops too few blocks to pay for the
-        extra phases, or the candidate set exceeds the broadcast budget.
-        """
-        wsz = 4096  # INNER_WINDOW_SIZE
-        tie = float(F32(mode_tie)) if mode_tie is not None else None
-        w_first = F.floor(F.col("first_doc") / F.lit(wsz)).cast("long")
-        w_last = F.floor(F.col("last_doc") / F.lit(wsz)).cast("long")
-        wmeta = blocks.select(
-            "term",
-            "seg_id",
-            "block_ord",
-            "_ub",
-            F.explode(F.sequence(w_first, w_last)).alias("w"),
+            ),
         )
-        wub = wmeta.groupBy("w", "term").agg(F.max("_ub").alias("wub"))
-        owin = Window.partitionBy("w").orderBy(
-            F.col("wub").asc(), F.col("term").asc()
-        )
-        ps = F.sum(F.col("wub").cast("double")).over(owin)
-        if tie is None:
-            comb = ps
-        else:
-            comb = F.col("wub").cast("double") + F.lit(tie) * (
-                ps - F.col("wub").cast("double")
-            )
-        # demote only when the bound stays under theta even after float32
-        # rounding (a double a hair under theta can round UP to tie it)
-        flags = wub.withColumn("is_ne", comb.cast("float") < F.lit(theta))
-        ess_wt = flags.filter(~F.col("is_ne")).select("w", "term")
-        ne_wt = flags.filter(F.col("is_ne")).select("w", "term", "wub")
-
-        e_sel = (
-            wmeta.join(ess_wt, ["w", "term"], "left_semi")
-            .select("term", "seg_id", "block_ord")
-            .distinct()
-        )
-        # worth it? one metadata-only job: total vs essential block counts
-        cnt = (
-            blocks.select("term", "seg_id", "block_ord")
-            .join(e_sel.withColumn("_e", F.lit(1)), ["term", "seg_id", "block_ord"], "left")
-            .agg(
-                F.count("*").alias("tot"),
-                F.sum(F.coalesce(F.col("_e"), F.lit(0))).alias("ess"),
-            )
-            .collect()[0]
-        )
-        tot_blocks, ess_blocks = int(cnt["tot"]), int(cnt["ess"] or 0)
-        if ess_blocks >= 0.95 * tot_blocks:
-            return None  # split drops too little to pay for extra phases
-        w_doc = F.floor(F.col("doc_id") / F.lit(wsz)).cast("long")
-        w_col = F.lit(None).cast("float")
-        for t, wv in weights.items():
-            w_col = F.when(F.col("term") == t, F.lit(wv).cast("float")).otherwise(
-                w_col
-            )
-        e_rows = (
-            blocks.join(e_sel, ["term", "seg_id", "block_ord"], "left_semi")
-            .select(decode_cols)
-            .mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
-        )
-        e_per = e_rows.select(
-            "doc_id",
-            w_doc.alias("w"),
-            "term",
-            self._score_col(field, F.col("freq"), F.col("norm"), w_col).alias("s"),
-        ).join(ess_wt, ["w", "term"], "left_semi")
-        e_agg = e_per.groupBy("doc_id", "w").agg(
-            F.sum(F.col("s").cast("double")).alias("e_sum"),
-            F.max("s").alias("e_max"),
-        )
-        nb = ne_wt.groupBy("w").agg(
-            F.sum(F.col("wub").cast("double")).alias("ne_sum"),
-            F.max("wub").alias("ne_max"),
-        )
-        with_nb = e_agg.join(nb, "w", "left")
-        sm_ub = F.col("e_sum") + F.coalesce(F.col("ne_sum"), F.lit(0.0))
-        if tie is None:
-            ub = sm_ub
-        else:
-            mx_ub = F.greatest(
-                F.col("e_max").cast("double"),
-                F.coalesce(F.col("ne_max").cast("double"), F.lit(0.0)),
-            )
-            ub = mx_ub + F.lit(tie) * (sm_ub - mx_ub)
-        cap = min(
-            self.prune_max_candidates, max(self.essential_max_candidates, 64 * k)
-        )
-        cand_rows = (
-            with_nb.filter(ub.cast("float") >= F.lit(theta))
-            .select("doc_id", "w", "e_sum", "e_max")
-            .limit(cap + 1)
-            .collect()
-        )
-        if len(cand_rows) > cap:
-            return None
-        spark = self.index.docs.sparkSession
-        cand = spark.createDataFrame(
-            [
-                (int(r["doc_id"]), int(r["w"]), float(r["e_sum"]), float(r["e_max"]))
-                for r in cand_rows
-            ],
-            schema="doc_id long, w long, e_sum double, e_max float",
-        )
-        # rescore side: EVERY block whose span holds a candidate (essential
-        # blocks included — a block essential in one window may hold a
-        # candidate in a neighboring window where its clause demoted); the
-        # is_ne filter keeps it disjoint from the partial
-        needed = blocks.join(
-            F.broadcast(cand.select("doc_id")),
-            (F.col("doc_id") >= F.col("first_doc"))
-            & (F.col("doc_id") <= F.col("last_doc")),
-            "left_semi",
-        )
-        if self.collect_prune_stats:
-            self.last_prune_stats = {
-                **stats_base,
-                "total_blocks": tot_blocks,
-                "essential_blocks": ess_blocks,
-                "rescore_blocks": needed.count(),
-                "n_candidates": len(cand_rows),
-                "fell_back": False,
-                "strategy": "maxscore_windowed",
-            }
-        n_per = (
-            needed.select(decode_cols)
-            .mapInPandas(_decode_blocks, schema=_DECODE_SCHEMA)
-            .join(F.broadcast(cand.select("doc_id")), "doc_id", "left_semi")
-            .select(
-                "doc_id",
-                w_doc.alias("w"),
-                "term",
-                self._score_col(field, F.col("freq"), F.col("norm"), w_col).alias(
-                    "s"
-                ),
-            )
-            .join(ne_wt.select("w", "term"), ["w", "term"], "left_semi")
-        )
-        n_agg = n_per.groupBy("doc_id").agg(
-            F.sum(F.col("s").cast("double")).alias("n_sum"),
-            F.max("s").alias("n_max"),
-        )
-        joined = cand.join(n_agg, "doc_id", "left")
-        sm = F.col("e_sum") + F.coalesce(F.col("n_sum"), F.lit(0.0))
-        if tie is None:
-            score = sm.cast("float")
-        else:
-            mx = F.greatest(
-                F.col("e_max").cast("double"),
-                F.coalesce(F.col("n_max").cast("double"), F.lit(0.0)),
-            )
-            score = (mx + F.lit(tie) * (sm - mx)).cast("float")
-        return joined.select("doc_id", score.alias("score"))
+        return cand.join(n_agg, "doc_id", "left").select("doc_id", score.alias("score"))
 
     # ------------------------------------------------------- batched serving
 

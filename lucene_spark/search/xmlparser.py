@@ -39,19 +39,25 @@ CorePlus extras (``queryparser/xml/CorePlusQueriesParser.java`` /
   children (BoostingQueryBuilder): matches the main query; docs also
   matching the context query have their score multiplied by ``boost``
   (default 0.01 — a demotion, never an exclusion);
-- ``<FuzzyLikeThisQuery maxNumTerms minSimilarity prefixLength
-  ignoreTF>`` with ``<Field fieldName=..>text</Field>`` children
+- ``<FuzzyLikeThisQuery maxNumTerms ignoreTF>`` with ``<Field
+  fieldName=.. minSimilarity=.. prefixLength=..>text</Field>`` children
   (FuzzyLikeThisQueryBuilder) -> ``extras.fuzzy_like_this`` per field,
-  scores summed across fields;
-- ``<LikeThisQuery maxQueryTerms minTermFrequency percentTermsToMatch>``
-  free text (LikeThisQueryBuilder) -> ``extras.like_this_query``'s
-  SHOULD-with-msm boolean resolved against the index at execution time
+  scores summed across fields. ``minSimilarity`` and ``prefixLength``
+  are read per ``<Field>``, inheriting from the root element, with the
+  reference defaults 2 and 1;
+- ``<LikeThisQuery fieldNames maxQueryTerms minTermFrequency
+  percentTermsToMatch>`` free text (LikeThisQueryBuilder): the
+  comma-delimited ``fieldNames`` each contribute ``extras.like_this_terms``
+  candidates to ONE queue, as the multi-field MoreLikeThis does; the top
+  ``maxQueryTerms`` (field, term) pairs form one SHOULD set with the msm
+  counted across fields, resolved against the index at execution time
   (term selection needs df stats, exactly why the reference defers to
   rewrite()).
 
-``minSimilarity`` maps to edit distance like FuzzyQuery's float-to-edits
-ramp: >= 0.5 -> 1 edit, < 0.5 -> 2 (documented simplification of the
-length-scaled formula).
+``minSimilarity >= 1`` is an integer edit count, as in the reference; a
+fraction below 1 maps through FuzzyQuery's float-to-edits ramp: >= 0.5
+-> 1 edit, < 0.5 -> 2 (documented simplification of the length-scaled
+formula).
 """
 
 from __future__ import annotations
@@ -224,25 +230,30 @@ def _build_query(el: ET.Element, field: str | None, analyzer) -> Q.Query:
                 raise XmlParseError(
                     f"FuzzyLikeThisQuery child <{c.tag}> != Field"
                 )
-            fields.append((_field(c, field), _text(c)))
+            # per-<Field> attributes, inheriting from the root element
+            min_sim = c.get("minSimilarity") or el.get("minSimilarity") or "2"
+            prefix = c.get("prefixLength") or el.get("prefixLength") or "1"
+            fields.append(
+                (_field(c, field), _text(c), _max_edits(float(min_sim)), int(prefix))
+            )
         if not fields:
             raise XmlParseError("FuzzyLikeThisQuery needs >= 1 <Field>")
-        min_sim = float(el.get("minSimilarity", "0.5"))
         return _boost(
             el,
             _FuzzyLikeThisWrapper(
                 tuple(fields),
                 max_num_terms=int(el.get("maxNumTerms", "50")),
-                max_edits=1 if min_sim >= 0.5 else 2,
-                prefix_length=int(el.get("prefixLength", "0")),
                 ignore_tf=el.get("ignoreTF", "false") == "true",
             ),
         )
     if tag == "LikeThisQuery":
+        names = el.get("fieldNames")
         return _boost(
             el,
             _LikeThisWrapper(
-                el.get("fieldNames") or field,
+                tuple(f.strip() for f in names.split(",") if f.strip())
+                if names
+                else (field,),
                 _text(el),
                 max_query_terms=int(el.get("maxQueryTerms", "20")),
                 min_term_freq=int(el.get("minTermFrequency", "1")),
@@ -259,6 +270,19 @@ def _build_query(el: ET.Element, field: str | None, analyzer) -> Q.Query:
             _field(el, field), _build_span(el, analyzer)
         )
     raise XmlParseError(f"unknown element <{tag}>")
+
+
+def _max_edits(min_similarity: float) -> int:
+    """FuzzyLikeThis ``minSimilarity`` -> edit distance: >= 1 is an
+    integer edit count (FuzzyLikeThisQueryBuilder.java); a fraction maps
+    through the >= 0.5 -> 1, < 0.5 -> 2 ramp."""
+    if min_similarity >= 1:
+        if min_similarity != int(min_similarity):
+            raise XmlParseError(
+                f"minSimilarity {min_similarity} >= 1 must be an integer edit count"
+            )
+        return int(min_similarity)
+    return 1 if min_similarity >= 0.5 else 2
 
 
 class _SpanWrapper(Q.Query):
@@ -283,13 +307,12 @@ class _BoostingWrapper(Q.Query):
 
 class _FuzzyLikeThisWrapper(Q.Query):
     """FuzzyLikeThisQuery element deferred to the executor (variant
-    discovery needs the term dictionary)."""
+    discovery needs the term dictionary). ``fields`` holds one
+    (field, text, max_edits, prefix_length) tuple per <Field>."""
 
-    def __init__(self, fields, max_num_terms, max_edits, prefix_length, ignore_tf):
+    def __init__(self, fields, max_num_terms, ignore_tf):
         self.fields = fields
         self.max_num_terms = max_num_terms
-        self.max_edits = max_edits
-        self.prefix_length = prefix_length
         self.ignore_tf = ignore_tf
 
 
@@ -297,9 +320,9 @@ class _LikeThisWrapper(Q.Query):
     """LikeThisQuery element deferred to the executor (term selection
     needs df stats — the reference's MoreLikeThisQuery.rewrite role)."""
 
-    def __init__(self, field, text, max_query_terms, min_term_freq,
+    def __init__(self, fields, text, max_query_terms, min_term_freq,
                  percent_terms_to_match):
-        self.field = field
+        self.fields = fields
         self.text = text
         self.max_query_terms = max_query_terms
         self.min_term_freq = min_term_freq
@@ -412,15 +435,15 @@ def _exec(searchers, q: Q.Query, default_field: str | None) -> DataFrame:
         from lucene_spark.search.extras import fuzzy_like_this
 
         parts = []
-        for f, text in q.fields:
+        for f, text, max_edits, prefix_length in q.fields:
             s = _searcher_for(searchers, f or default_field)
             parts.append(
                 fuzzy_like_this(
                     s,
                     text,
                     k=1 << 30,
-                    max_edits=q.max_edits,
-                    prefix_length=q.prefix_length,
+                    max_edits=max_edits,
+                    prefix_length=prefix_length,
                     max_num_terms=q.max_num_terms,
                     ignore_tf=q.ignore_tf,
                 ).select("doc_id", F.col("score").cast("double").alias("score"))
@@ -430,22 +453,37 @@ def _exec(searchers, q: Q.Query, default_field: str | None) -> DataFrame:
             out = out.unionByName(p)
         return out.groupBy("doc_id").agg(F.sum("score").alias("score"))
     if isinstance(q, _LikeThisWrapper):
-        from lucene_spark.search.extras import like_this_query
+        from lucene_spark.search.extras import like_this_terms
 
-        s = _searcher_for(searchers, q.field or default_field)
-        resolved = like_this_query(
-            s,
-            q.text,
-            max_query_terms=q.max_query_terms,
-            min_term_freq=q.min_term_freq,
-            percent_terms_to_match=q.percent_terms_to_match,
-        )
-        if isinstance(resolved, Q.MatchNoDocsQuery):
+        # multi-field MoreLikeThis: every listed field's candidates rank
+        # in ONE queue (tf desc, df asc, like extras.like_this_query), the
+        # top max_query_terms (field, term) pairs form one SHOULD set, and
+        # the minimum-should-match counts clauses across fields
+        by_field = {}
+        for f in q.fields:
+            s = _searcher_for(searchers, f or default_field)
+            by_field.setdefault(s.index.config.field_name, s)
+        ranked = sorted(
+            (-tf, df, fld, t)
+            for fld, s in by_field.items()
+            for tf, df, t in like_this_terms(s, q.text, q.min_term_freq)
+        )[: q.max_query_terms]
+        if not ranked:
             return s.index.docs.select(
                 "doc_id", F.lit(0.0).alias("score")
             ).limit(0)
-        return s.search(resolved, k=1 << 30).select(
-            "doc_id", F.col("score").cast("double").alias("score")
+        msm = max(1, int(len(ranked) * q.percent_terms_to_match))
+        u = None
+        for _, _, fld, t in ranked:
+            part = by_field[fld].scored(Q.TermQuery(fld, t))
+            u = part if u is None else u.unionByName(part)
+        # SHOULD-sum as _scored_boolean: double accumulation, one float round
+        agg = u.groupBy("doc_id").agg(
+            F.sum(F.col("score").cast("double")).alias("s"),
+            F.count("*").alias("n"),
+        )
+        return agg.filter(F.col("n") >= msm).select(
+            "doc_id", F.col("s").cast("float").cast("double").alias("score")
         )
     if isinstance(q, (Q.BoostQuery, Q.ConstantScoreQuery)):
         b = float(getattr(q, "boost", 1.0))

@@ -2,6 +2,8 @@
 run queries, require rank-identical (doc_id, float32 score) vs the pure-Python
 oracle (CheckHits / quality-harness style, SURVEY §5)."""
 
+import re
+
 import numpy as np
 import pytest
 
@@ -52,15 +54,27 @@ def test_term_query_rank_identical(built, term):
     _assert_topk_identical(res, oracle.top_k(oracle.term_scores(term), 10), 10)
 
 
+def _plan_text(df):
+    """Logical plan text without expression ids and lambda-variable
+    numbers, to compare two builds of a plan."""
+    text = df._jdf.queryExecution().logical().toString()
+    return re.sub(r"#\d+L?|(?<=\bx)_\d+", "", text)
+
+
 def test_term_query_pruned_equals_unpruned(built):
     """The two-phase block-max path must actually ENGAGE here (gate forced
-    below the hot term's df) and agree with the full decode + oracle."""
+    below the hot term's df) and agree with the full decode + oracle.
+    Stats collection only adds count jobs: the returned plan is the one
+    built with it off."""
     idx, _, oracle = built
     searcher = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
-    searcher.collect_prune_stats = True
     q = Q.TermQuery("content", "the")
+    plan_off = _plan_text(searcher.search(q, k=5))
+    searcher.collect_prune_stats = True
     assert oracle.df("the") > 20  # hot enough that the gate opens
-    pruned = searcher.search(q, k=5, prune=True).collect()
+    pruned_df = searcher.search(q, k=5, prune=True)
+    assert _plan_text(pruned_df) == plan_off
+    pruned = pruned_df.collect()
     assert searcher.last_prune_stats is not None  # two-phase path ran
     assert searcher.last_prune_stats["total_blocks"] > 0
     full = searcher.search(q, k=5, prune=False).collect()
@@ -72,44 +86,6 @@ def test_term_query_pruned_equals_unpruned(built):
         oracle.top_k(oracle.term_scores("the"), 5),
         5,
     )
-
-
-def test_disjunction_pruned_equals_unpruned(built):
-    """MAXSCORE-family pruning on SHOULD-sum and dismax disjunctions:
-    engaged (stats recorded), exact-rescored, oracle-identical."""
-    idx, _, oracle = built
-    searcher = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
-    searcher.collect_prune_stats = True
-    searcher.prune_keep_frac = 2.0  # force the rescore branch at test scale
-    q_or = Q.BooleanQuery.of(
-        should=[Q.TermQuery("content", "the"), Q.TermQuery("content", "if")]
-    )
-    pruned = searcher.search(q_or, k=5, prune=True).collect()
-    assert searcher.last_prune_stats is not None
-    stats = searcher.last_prune_stats
-    assert stats["fell_back"] is False  # the exact-rescore path executed
-    assert stats["kept_blocks"] <= stats["total_blocks"]
-    full = searcher.search(q_or, k=5, prune=False).collect()
-    assert [(r["doc_id"], r["score"]) for r in pruned] == [
-        (r["doc_id"], r["score"]) for r in full
-    ]
-    _assert_topk_identical(
-        searcher.search(q_or, k=5, prune=True),
-        oracle.top_k(oracle.or_scores(["the", "if"]), 5),
-        5,
-    )
-    # dismax flavor (tie-scaled keep rule)
-    searcher.last_prune_stats = None
-    q_dm = Q.DisjunctionMaxQuery(
-        (Q.TermQuery("content", "the"), Q.TermQuery("content", "if")),
-        tie_breaker=0.5,
-    )
-    pruned_dm = searcher.search(q_dm, k=5, prune=True).collect()
-    assert searcher.last_prune_stats is not None
-    full_dm = searcher.search(q_dm, k=5, prune=False).collect()
-    assert [(r["doc_id"], r["score"]) for r in pruned_dm] == [
-        (r["doc_id"], r["score"]) for r in full_dm
-    ]
 
 
 def test_boolean_or(built):
@@ -245,23 +221,23 @@ def test_search_many_matches_individual(built):
 
 
 def test_disjunction_hot_clauses_take_essential_path(built):
-    """Uniformly-hot clauses defeat BLOCK-level pruning (theta below most
-    block bounds, keep rule retains everything) — the MAXSCORE
-    essential/non-essential split must engage instead of falling back to
-    a full decode (MaxScoreBulkScorer.java:28-70): the weaker clause is
-    demoted to probe-at-candidates, stats say so, and the result stays
-    bit-identical to the plain disjunction."""
+    """MAXSCORE pruning on SHOULD-sum and dismax disjunctions
+    (MaxScoreBulkScorer.java:28-70): the essential/non-essential split
+    engages, the weaker clause is demoted to probe-at-candidates, stats
+    say so, and the result stays bit-identical to the plain disjunction
+    and the oracle."""
     idx, _, oracle = built
     searcher = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
-    searcher.collect_prune_stats = True  # default prune_keep_frac = 0.5
     q_or = Q.BooleanQuery.of(
         should=[Q.TermQuery("content", "the"), Q.TermQuery("content", "if")]
     )
-    pruned = searcher.search(q_or, k=5, prune=True).collect()
+    plan_off = _plan_text(searcher.search(q_or, k=5))
+    searcher.collect_prune_stats = True
+    pruned_df = searcher.search(q_or, k=5, prune=True)
+    assert _plan_text(pruned_df) == plan_off
+    pruned = pruned_df.collect()
     stats = searcher.last_prune_stats
     assert stats is not None
-    # the keep rule retained too much -> essential strategy, not fallback
-    assert stats["kept_blocks"] > 0.5 * stats["total_blocks"]
     assert stats["fell_back"] is False
     assert stats["strategy"] == "maxscore_essential"
     # only the essential clause(s) decode fully; the non-essential side
@@ -284,10 +260,67 @@ def test_disjunction_hot_clauses_take_essential_path(built):
         tie_breaker=0.5,
     )
     pruned_dm = searcher.search(q_dm, k=5, prune=True).collect()
+    assert searcher.last_prune_stats["strategy"] == "maxscore_essential"
     full_dm = searcher.search(q_dm, k=5, prune=False).collect()
     assert [(r["doc_id"], r["score"]) for r in pruned_dm] == [
         (r["doc_id"], r["score"]) for r in full_dm
     ]
+
+
+def test_disjunction_nosplit_falls_back_to_plain(built):
+    """Two rare clauses of similar strength whose top docs rarely share
+    both terms: theta sits below both clause bounds, no clause demotes
+    (``nosplit``), and the query takes the plain one-shuffle plan —
+    bit-identical to prune=False and the oracle."""
+    idx, _, oracle = built
+    searcher = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
+    searcher.collect_prune_stats = True
+    clauses = (Q.TermQuery("content", "lambda"), Q.TermQuery("content", "struct"))
+    for q in (
+        Q.BooleanQuery.of(should=list(clauses)),
+        Q.DisjunctionMaxQuery(clauses, tie_breaker=0.0),
+    ):
+        searcher.last_prune_stats = None
+        pruned = searcher.search(q, k=10).collect()
+        stats = searcher.last_prune_stats
+        assert stats["strategy"] == "nosplit", stats
+        assert stats["fell_back"] is True
+        full = searcher.search(q, k=10, prune=False).collect()
+        assert [(r["doc_id"], r["score"]) for r in pruned] == [
+            (r["doc_id"], r["score"]) for r in full
+        ]
+    _assert_topk_identical(
+        searcher.search(Q.BooleanQuery.of(should=list(clauses)), k=10),
+        oracle.top_k(oracle.or_scores(["lambda", "struct"]), 10),
+        10,
+    )
+
+
+def test_candidate_cap_overflow_falls_back_to_plain(built, monkeypatch):
+    """When the essential split engages but more candidates clear the
+    essential bound than the budget allows (``MAX_CANDIDATES``), the query
+    takes the plain one-shuffle plan: strategy ``cap``, results
+    bit-identical to the plain disjunction for SHOULD-sum and dismax. A
+    budget below k always overflows (the true top-k are candidates)."""
+    idx, _, _ = built
+    monkeypatch.setattr(IndexSearcher, "MAX_CANDIDATES", 3)
+    searcher = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
+    searcher.collect_prune_stats = True
+    clauses = (Q.TermQuery("content", "the"), Q.TermQuery("content", "if"))
+    for q in (
+        Q.BooleanQuery.of(should=list(clauses)),
+        Q.DisjunctionMaxQuery(clauses, tie_breaker=0.4),
+    ):
+        searcher.last_prune_stats = None
+        pruned = searcher.search(q, k=10).collect()
+        stats = searcher.last_prune_stats
+        assert stats["strategy"] == "cap", stats
+        assert stats["fell_back"] is True
+        assert stats["n_candidates"] > 3
+        full = searcher.search(q, k=10, prune=False).collect()
+        assert [(r["doc_id"], r["score"]) for r in pruned] == [
+            (r["doc_id"], r["score"]) for r in full
+        ]
 
 
 def test_search_many_empty_batch(built):
@@ -337,7 +370,7 @@ def test_preloaded_block_meta_identical_and_used(built):
 def test_preloaded_maxub_matches_jvm_block_bound(built):
     """The preloaded frontier's driver-side max bound must equal the JVM
     max-over-blocks of _block_ub bit-for-bit (same float32 kernel) — the
-    keep rule's soundness depends on it being an upper bound."""
+    essential split's soundness depends on it being an upper bound."""
     from pyspark.sql import functions as F
 
     idx, searcher, _ = built
@@ -356,184 +389,6 @@ def test_preloaded_maxub_matches_jvm_block_bound(built):
             .collect()[0][0]
         )
         assert got == float(jvm), (term, got, jvm)
-
-
-def test_windowed_maxscore_engages_on_local_hotness(spark):
-    """Per-window MAXSCORE (MaxScoreBulkScorer.java:26-70): when every
-    clause has a high GLOBAL bound (a freak short high-tf doc somewhere),
-    the global essential split cannot demote anything ("nosplit"), but
-    within each 4096-doc window only the locally-hot clause is essential
-    — the windowed strategy decodes ~1/3 of the blocks and stays
-    bit-identical to the plain disjunction.
-
-    Corpus: 12,288 regular docs (all three terms once, long) in exactly
-    three windows; 3 freak docs per term (term^50, nothing else), one
-    term's freaks per window; 30,000 short filler docs (no query terms)
-    deflate avgdl so regular tf=1 contributions stay small enough that
-    the freak bounds exceed theta."""
-    FILL = [f"w{j % 89}" for j in range(400)]
-    rows = []
-    for i in range(12288):
-        L = 220 + (i * 37) % 61
-        rows.append(("r", f"p{i}", "c", "t", " ".join(["aaa", "bbb", "ccc"] + FILL[: L - 3])))
-    freak = {10: "aaa", 11: "aaa", 12: "aaa",
-             4106: "bbb", 4107: "bbb", 4108: "bbb",
-             8202: "ccc", 8203: "ccc", 8204: "ccc"}
-    for i, t in freak.items():
-        rows[i] = ("r", f"p{i}", "c", "t", " ".join([t] * 50))
-    for i in range(30000):
-        rows.append(("r", f"f{i}", "c", "t", " ".join(FILL[:10])))
-    corpus = spark.createDataFrame(
-        rows, schema="repo string, path string, commit string, lang string, content string"
-    )
-    cfg = IndexConfig(text_col="content", field_name="content", order_by=None)
-    idx = build_index(spark, corpus, cfg)
-    idx.postings.persist()
-    try:
-        searcher = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
-        searcher.collect_prune_stats = True
-        q = Q.BooleanQuery.of(
-            should=[
-                Q.TermQuery("content", "aaa"),
-                Q.TermQuery("content", "bbb"),
-                Q.TermQuery("content", "ccc"),
-            ]
-        )
-        pruned = searcher.search(q, k=10).collect()
-        stats = searcher.last_prune_stats
-        assert stats is not None
-        assert stats["strategy"] == "maxscore_windowed", stats
-        assert stats["fell_back"] is False
-        # the split is real: about one clause of three decodes per window
-        assert stats["essential_blocks"] < 0.6 * stats["total_blocks"], stats
-        # and the global split really was defeated (not just skipped)
-        assert searcher._essential_fail_reason == "nosplit"
-        full = searcher.search(q, k=10, prune=False).collect()
-        assert [(r["doc_id"], r["score"]) for r in pruned] == [
-            (r["doc_id"], r["score"]) for r in full
-        ]
-        # the freaks dominate the top-9: three per term
-        top_terms = [r["doc_id"] for r in pruned[:9]]
-        assert set(top_terms) == set(freak.keys())
-    finally:
-        idx.postings.unpersist()
-
-
-def test_flat_hot_disjunction_skips_windowed_retry_from_histograms(spark):
-    """The windowed retry's zero-job cost guard
-    (``_windowed_split_promising``): when the preloaded block-bound
-    histograms show every clause's p95 block bound at its max (uniformly-
-    hot shape — every 256-doc block holds a max-bound doc for each
-    clause), no 4096-doc window can demote anything, so the retry's
-    planning job is skipped driver-side and the query falls straight back
-    to the exact one-shuffle disjunction.
-
-    Symmetric fixture so the GLOBAL split fails with nosplit (not cap):
-    per 128 docs, one aaa-only freak and one bbb-only freak (identical
-    tf/length, and equal dfs by construction, so the two clauses' max
-    bounds are bit-identical and theta — the k-th exact combined score,
-    set by the freaks — EQUALS each clause's bound; nothing demotes)."""
-    rows = []
-    FILL = [f"w{j % 89}" for j in range(400)]
-    for i in range(12800):
-        if i % 128 == 0:
-            rows.append(("r", f"p{i}", "c", "t", " ".join(["aaa"] * 8)))
-        elif i % 128 == 64:
-            rows.append(("r", f"p{i}", "c", "t", " ".join(["bbb"] * 8)))
-        else:
-            rows.append(
-                ("r", f"p{i}", "c", "t", " ".join(["aaa", "bbb"] + FILL[:298]))
-            )
-    corpus = spark.createDataFrame(
-        rows,
-        schema="repo string, path string, commit string, lang string, content string",
-    )
-    cfg = IndexConfig(text_col="content", field_name="content", order_by=None)
-    idx = build_index(spark, corpus, cfg)
-    idx.postings.persist()
-    try:
-        searcher = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
-        searcher.preload_stats()
-        assert searcher.preload_block_meta() >= 2
-        searcher.collect_prune_stats = True
-        q = Q.BooleanQuery.of(
-            should=[Q.TermQuery("content", "aaa"), Q.TermQuery("content", "bbb")]
-        )
-        pruned = searcher.search(q, k=10).collect()
-        stats = searcher.last_prune_stats
-        assert stats is not None
-        assert stats["fell_back"] is True, stats
-        assert stats.get("windowed") == "flat_hist", stats
-        assert searcher._essential_fail_reason == "nosplit"
-        full = searcher.search(q, k=10, prune=False).collect()
-        assert [(r["doc_id"], r["score"]) for r in pruned] == [
-            (r["doc_id"], r["score"]) for r in full
-        ]
-    finally:
-        idx.postings.unpersist()
-
-
-def test_essential_completion_on_candidate_cap(spark):
-    """When the essential split engages but the candidate set overflows
-    the broadcast budget (flat score distribution), the searcher COMPLETES
-    the already-executed essential decode with only the non-essential
-    blocks' decode (full-outer combine) instead of discarding it and
-    re-decoding everything — strategy `essential_completion`, results
-    bit-identical to the plain disjunction.
-
-    Fixture: the strong clause sits tf=1 in 2,000 SHORT docs with
-    near-identical lengths (flat scores — theta lands inside the flat
-    mass, so every strong-clause doc plus the weak bound clears it); the
-    weak clause sits tf=1 in 2,000 LONG docs (norm-penalized bound below
-    theta -> demotes globally; similar df keeps the idfs comparable).
-    Caps are lowered so the flat candidate set overflows."""
-    rows = []
-    FILL = [f"w{j % 89}" for j in range(400)]
-    for i in range(2000):
-        L = 200 + (i * 13) % 17
-        rows.append(("r", f"a{i}", "c", "t", " ".join(["aaa"] + FILL[:L])))
-    for i in range(2000):
-        rows.append(("r", f"b{i}", "c", "t", " ".join(["bbb"] + FILL[:399])))
-    for i in range(1000):
-        rows.append(("r", f"f{i}", "c", "t", " ".join(FILL[:50])))
-    corpus = spark.createDataFrame(
-        rows,
-        schema="repo string, path string, commit string, lang string, content string",
-    )
-    cfg = IndexConfig(text_col="content", field_name="content", order_by=None)
-    idx = build_index(spark, corpus, cfg)
-    idx.postings.persist()
-    try:
-        searcher = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
-        searcher.prune_max_candidates = 50  # force the cap overflow
-        searcher.collect_prune_stats = True
-        q = Q.BooleanQuery.of(
-            should=[Q.TermQuery("content", "aaa"), Q.TermQuery("content", "bbb")]
-        )
-        pruned = searcher.search(q, k=10).collect()
-        stats = searcher.last_prune_stats
-        assert stats is not None
-        assert stats["strategy"] == "essential_completion", stats
-        assert stats["fell_back"] is False
-        assert searcher._essential_fail_reason == "cap"
-        full = searcher.search(q, k=10, prune=False).collect()
-        assert [(r["doc_id"], r["score"]) for r in pruned] == [
-            (r["doc_id"], r["score"]) for r in full
-        ]
-        # the deferred-unpersist bookkeeping drained on the second search
-        assert searcher._deferred_unpersist == []
-        # dismax over the same shape completes identically
-        dq = Q.DisjunctionMaxQuery(
-            (Q.TermQuery("content", "aaa"), Q.TermQuery("content", "bbb")),
-            tie_breaker=0.4,
-        )
-        dp = searcher.search(dq, k=10).collect()
-        df_ = searcher.search(dq, k=10, prune=False).collect()
-        assert [(r["doc_id"], r["score"]) for r in dp] == [
-            (r["doc_id"], r["score"]) for r in df_
-        ]
-    finally:
-        idx.postings.unpersist()
 
 
 def test_direct_spell_checker(built):

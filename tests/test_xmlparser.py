@@ -184,6 +184,59 @@ def test_core_plus_fuzzy_like_this(searchers):
     assert _ids(searchers, xml) >= {2, 3}
 
 
+def test_fuzzy_like_this_reads_per_field_attributes(searchers):
+    """Reference format (FuzzyLikeThisQueryBuilder.java): minSimilarity
+    and prefixLength are read per <Field>, inheriting from the root;
+    minSimilarity >= 1 is an edit count (default 2), prefixLength
+    defaults to 1. 'margor' is two edits from 'merger'."""
+    xml = """
+<FuzzyLikeThisQuery maxNumTerms="10" minSimilarity="1" prefixLength="0">
+  <Field fieldName="contents" minSimilarity="2">margor</Field>
+  <Field fieldName="contents">margor</Field>
+</FuzzyLikeThisQuery>"""
+    q = XP.parse(xml, default_field="contents")
+    assert [f[2:] for f in q.fields] == [(2, 0), (1, 0)]
+    bare = XP.parse(
+        '<FuzzyLikeThisQuery><Field fieldName="contents">x</Field>'
+        "</FuzzyLikeThisQuery>"
+    )
+    assert bare.fields[0][2:] == (2, 1)  # reference defaults
+    two_edits = (
+        '<FuzzyLikeThisQuery><Field fieldName="contents" minSimilarity="2">'
+        "margor</Field></FuzzyLikeThisQuery>"
+    )
+    assert _ids(searchers, two_edits) >= {2, 3}
+    assert not _ids(searchers, two_edits.replace('"2"', '"1"')) & {2, 3}
+    with pytest.raises(XP.XmlParseError):  # edit counts are integers
+        XP.parse(two_edits.replace('"2"', '"1.5"'))
+
+
+def test_like_this_field_names_are_comma_delimited(searchers):
+    """Reference format (LikeThisQueryBuilder.java): fieldNames is a
+    comma-delimited list. In dict mode every listed field contributes
+    terms to one queue, and percentTermsToMatch counts matched clauses
+    across fields: at 100% only doc 5 holds 'workers' and 'killed' in
+    contents AND '19870413' in date."""
+
+    def xml(pct):
+        return (
+            '<LikeThisQuery fieldNames="contents, date" maxQueryTerms="6" '
+            f'percentTermsToMatch="{pct}">workers killed 19870413'
+            "</LikeThisQuery>"
+        )
+
+    assert XP.parse(xml(30)).fields == ("contents", "date")
+    assert _ids(searchers, xml(30)) == {3, 4, 5}
+    assert _ids(searchers, xml(100)) == {5}
+    single = xml(100).replace("contents, date", "contents")
+    assert _ids(searchers, single) == {5}  # workers AND killed
+    scores = {
+        int(r["doc_id"]): float(r["score"])
+        for r in XP.execute(searchers, xml(30), k=10).collect()
+    }
+    assert max(scores, key=scores.get) == 5
+
+
 def test_core_plus_like_this_query(searchers):
     """LikeThisQueryBuilder: free text selects interesting index terms
     and matches similar docs with percentTermsToMatch as msm."""
