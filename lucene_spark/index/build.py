@@ -5,10 +5,14 @@ Spark-native re-expression of the reference indexing chain:
 - per-task inversion (tokenize + per-doc term/positions map) mirrors the
   DWPT invert loop (``index/IndexingChain.java:1888-2040``); each Spark
   task plays the role of one DocumentsWriterPerThread
-  (``index/DocumentsWriterPerThread.java:52``). Default front-end: JVM
-  regexp tokenize + Arrow-native grouping (``_make_arrow_grouper``) —
-  no Python strings anywhere; stopwords/offsets/custom analyzers use
-  the shared Python analyzer in one ``mapInPandas`` pass;
+  (``index/DocumentsWriterPerThread.java:52``). One pipeline,
+  ``_invert_and_pack``, builds every index: ``build_index`` and each
+  segment of ``segments.build_segmented`` and of the NRT micro-segment
+  writer, as the reference's one indexing chain serves every flush. The
+  config alone picks the front-end: the plain chain takes JVM regexp
+  tokenize + Arrow-native grouping (``_make_arrow_grouper``), no Python
+  strings anywhere; stopwords/offsets/custom analyzers use the shared
+  Python analyzer in one ``mapInPandas`` pass;
 - postings grouped by ``(seg_id, field, term)`` and packed into 256-doc
   blocks with delta+FOR doc gaps, PFor freqs, raw norms, FOR positions and
   per-block competitive impact frontiers (the ``(freq, norm)`` Pareto set)
@@ -79,13 +83,6 @@ class IndexConfig:
     #: shingles, char n-grams). Forces the Python invert pass; the JVM
     #: SQL twin covers only the plain StandardAnalyzer chain.
     analyzer: object | None = None
-    #: invert front-end: "auto" picks "arrow" for the plain
-    #: StandardAnalyzer chain (JVM regex tokenize -> Arrow-native
-    #: grouping, posting-row shuffle) and "python" when stopwords /
-    #: offsets / a custom analyzer require the shared Python analyzer.
-    #: "jvm" keeps tokenize AND grouping out of Python entirely (token
-    #: rows through the shuffle — more rows, kept for A/B measurement).
-    invert_mode: str = "auto"
 
 
 # positions travel as raw little-endian uint32 buffers (BinaryType), NOT
@@ -343,27 +340,13 @@ def _make_inverter(cfg: IndexConfig):
     return invert
 
 
-def _jvm_token_stream(docs: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """JVM-side tokenize+explode: (seg_id, term, doc_id, pos, norm) rows.
-
-    The whole invert front-end as native Spark SQL (no Python anywhere):
-    the pinned-equivalent StandardAnalyzer regexp (``analysis/sql.py``,
-    equivalence goldens in ``tests/test_tokenizer.py``) extracts the raw
-    token array once per doc; ``posexplode`` assigns positions over the
-    RAW stream so over-long tokens still count a position
-    (``StandardTokenizer.java:163-173``) before the length filter drops
-    them; the byte4 norm is the per-doc staircase fold over the KEPT
-    count. Per-(doc, term) grouping moves into the block packer, which
-    already receives (seg_id, term)-partitioned doc-sorted runs — so the
-    build's only Python stage is the pack, and the only shuffle is still
-    the pack repartition (now carrying token rows instead of posting
-    rows: ~ttf/df ≈ 1.2-2x more, each a few bytes).
-
-    Only valid for the empty-stopword analyzer (stopword gaps change both
-    positions and norms); ``build_index`` falls back to the Python
-    inverter otherwise.
-    """
-    from lucene_spark.analysis.sql import _extract_tokens, sql_norm_byte
+def _jvm_tokenized(docs: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """JVM-side tokenize only: (doc_id, toks array<string>) — the raw
+    token stream per doc, positions implicit in array order. The regexp
+    is the pinned-equivalent StandardAnalyzer pattern (``analysis/sql.py``,
+    equivalence goldens in ``tests/test_tokenizer.py``); the length
+    filter and norms happen in ``_make_arrow_grouper``."""
+    from lucene_spark.analysis.sql import _extract_tokens
 
     text = F.coalesce(F.col(cfg.text_col), F.lit(""))
     lowered = F.lower(F.translate(text, "İ", "i"))
@@ -371,34 +354,6 @@ def _jvm_token_stream(docs: DataFrame, cfg: IndexConfig) -> DataFrame:
     # take the classic \w pattern — the CJK-aware class pattern costs +67%
     # on this kernel and is only needed when a CJK codepoint is present
     raw = _extract_tokens(lowered)
-    max_len = F.lit(cfg.max_token_length)
-    with_toks = docs.select("doc_id", raw.alias("_toks"))
-    kept_count = F.size(F.filter(F.col("_toks"), lambda t: F.length(t) <= max_len))
-    return (
-        with_toks.select(
-            "doc_id",
-            sql_norm_byte(kept_count).alias("norm"),
-            F.posexplode("_toks").alias("pos", "term"),
-        )
-        .filter(F.length("term") <= max_len)
-        .select(
-            F.expr(f"doc_id DIV {cfg.docs_per_segment}").alias("seg_id"),
-            "term",
-            "doc_id",
-            F.col("pos").cast("int").alias("pos"),
-            F.col("norm").cast("int").alias("norm"),
-        )
-    )
-
-
-def _jvm_tokenized(docs: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """JVM-side tokenize only: (doc_id, toks array<string>) — the raw
-    token stream per doc, positions implicit in array order."""
-    from lucene_spark.analysis.sql import _extract_tokens
-
-    text = F.coalesce(F.col(cfg.text_col), F.lit(""))
-    lowered = F.lower(F.translate(text, "İ", "i"))
-    raw = _extract_tokens(lowered)  # dispatched: see _jvm_token_stream
     return docs.select("doc_id", raw.alias("toks"))
 
 
@@ -419,10 +374,9 @@ def _make_arrow_grouper(cfg: IndexConfig):
       4*ends[g]]; groups are adjacent so the offsets vector IS
       ``starts * 4``).
 
-    vs the pure-JVM path (``_jvm_token_stream``): the shuffle carries
-    posting rows (~df) instead of token rows (~ttf) and the sort key
-    drops ``pos``; vs the Python inverter: no per-doc ``re.findall`` and
-    no per-token PyObject churn. Positions count over the RAW stream
+    The shuffle carries posting rows (~df), not token rows (~ttf); vs
+    the Python inverter: no per-doc ``re.findall`` and no per-token
+    PyObject churn. Positions count over the RAW stream
     (over-long tokens hold a slot, ``StandardTokenizer.java:163-173``);
     norms fold the KEPT count.
     """
@@ -510,143 +464,6 @@ def _make_arrow_grouper(cfg: IndexConfig):
     return group
 
 
-def _make_block_packer_tokens(cfg: IndexConfig):
-    """Streaming per-partition packer over raw TOKEN rows.
-
-    Input: (seg_id, term, doc_id, pos, norm) repartitioned on
-    (seg_id, term) and sorted by (seg_id, term, doc_id, pos) — each
-    term's occurrences arrive as one contiguous doc-and-position-ordered
-    run. The per-(doc, term) aggregation the Python inverter used to do
-    happens here as two vectorized numpy boundary scans (doc boundaries,
-    then term boundaries over the doc-level arrays); positions are
-    already flat slices, so no per-doc concatenation is needed at all.
-    Emits the same POSTINGS_SCHEMA blocks as ``_make_block_packer``.
-    """
-    block_size, field_name, with_positions = (
-        cfg.block_size,
-        cfg.field_name,
-        cfg.with_positions,
-    )
-
-    def pack_runs(pdf: pd.DataFrame, out: list) -> None:
-        seg = pdf["seg_id"].to_numpy(dtype=np.int64)
-        terms = pdf["term"].to_numpy()
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        pos = pdf["pos"].to_numpy(dtype=np.uint32)
-        norms = pdf["norm"].to_numpy(dtype=np.uint8)
-        # token rows -> posting-level arrays: one row per (seg, term, doc)
-        change_doc = np.flatnonzero(
-            (seg[1:] != seg[:-1])
-            | (terms[1:] != terms[:-1])
-            | (doc_ids[1:] != doc_ids[:-1])
-        )
-        dstarts = np.concatenate(([0], change_doc + 1))
-        dends = np.concatenate((change_doc + 1, [len(pdf)]))
-        g_seg = seg[dstarts]
-        g_term = terms[dstarts]
-        g_doc = doc_ids[dstarts]
-        g_freq = (dends - dstarts).astype(np.uint32)
-        g_norm = norms[dstarts]
-        # (seg, term) run boundaries over the posting-level arrays
-        change_term = np.flatnonzero(
-            (g_seg[1:] != g_seg[:-1]) | (g_term[1:] != g_term[:-1])
-        )
-        tstarts = np.concatenate(([0], change_term + 1))
-        tends = np.concatenate((change_term + 1, [len(g_doc)]))
-        for s, e in zip(tstarts, tends):
-            seg_id = int(g_seg[s])
-            term = g_term[s]
-            if e - s == 1:
-                # df=1 singleton fast path (pulsing,
-                # Lucene104PostingsWriter.java:560-577)
-                fr = int(g_freq[s])
-                if with_positions:
-                    pos_buf = forutil.for_encode(pos[dstarts[s] : dends[s]])
-                else:
-                    pos_buf = b""
-                out.append(
-                    (
-                        field_name,
-                        seg_id,
-                        term,
-                        0,
-                        1,
-                        int(g_doc[s]),
-                        int(g_doc[s]),
-                        fr,
-                        int(g_norm[s]),
-                        fr,
-                        b"\x01\x00\x00",
-                        forutil.pfor_encode(g_freq[s : s + 1]),
-                        g_norm[s : s + 1].tobytes(),
-                        pos_buf,
-                        b"",
-                        [fr, int(g_norm[s])],
-                    )
-                )
-                continue
-            for ord_, bstart in enumerate(range(s, e, block_size)):
-                bend = min(bstart + block_size, e)
-                d = g_doc[bstart:bend]
-                f = g_freq[bstart:bend]
-                nm = g_norm[bstart:bend]
-                first, gaps = forutil.delta_encode(d)
-                if with_positions:
-                    pos_buf = forutil.for_encode(
-                        pos[dstarts[bstart] : dends[bend - 1]]
-                    )
-                else:
-                    pos_buf = b""
-                out.append(
-                    (
-                        field_name,
-                        seg_id,
-                        term,
-                        ord_,
-                        int(bend - bstart),
-                        int(first),
-                        int(d[-1]),
-                        int(f.max()),
-                        int(nm.min()),
-                        int(f.sum()),
-                        forutil.for_encode(gaps),
-                        forutil.pfor_encode(f),
-                        nm.tobytes(),
-                        pos_buf,
-                        b"",
-                        _competitive_impacts(f, nm),
-                    )
-                )
-
-    cols = [f.name for f in POSTINGS_SCHEMA.fields]
-
-    def pack_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            seg = pdf["seg_id"].to_numpy(dtype=np.int64)
-            terms = pdf["term"].to_numpy()
-            tail = (seg == seg[-1]) & (terms == terms[-1])
-            cut = len(pdf) - int(tail[::-1].argmin()) if not tail.all() else 0
-            carry = pdf.iloc[cut:]
-            body = pdf.iloc[:cut]
-            if len(body) == 0:
-                continue
-            out: list = []
-            pack_runs(body, out)
-            yield pd.DataFrame(out, columns=cols)
-        if carry is not None and len(carry):
-            out = []
-            pack_runs(carry, out)
-            yield pd.DataFrame(out, columns=cols)
-
-    return pack_stream
-
-
 def _pos_array(p) -> np.ndarray:
     """positions cell -> uint32 array (binary fast path or int-list)."""
     if isinstance(p, (bytes, bytearray)):
@@ -668,7 +485,7 @@ def _make_doclen_counter(cfg: IndexConfig):
 
     Re-tokenizes instead of aggregating the exploded posting stream — the
     second tokenize costs far less than shuffling + caching ~35x the corpus
-    rows (see build_index notes)."""
+    rows (see ``_invert_and_pack``)."""
     analyzer = cfg.analyzer or StandardAnalyzer(
         max_token_length=cfg.max_token_length, stopwords=cfg.stopwords
     )
@@ -843,99 +660,65 @@ def _make_block_packer(cfg: IndexConfig):
     return pack_stream
 
 
-def build_index(
-    spark: SparkSession,
-    corpus: DataFrame,
-    cfg: IndexConfig | None = None,
-    index_dir: str | None = None,
-) -> InvertedIndex:
-    cfg = cfg or IndexConfig()
-    if cfg.with_offsets and cfg.analyzer is not None:
-        # fail at config time with a clear message, not mid-job with a raw
-        # AttributeError from an executor task
-        try:
-            cfg.analyzer.term_position_offset_arrays("")
-        except Exception as e:
-            raise ValueError(
-                "with_offsets=True requires the analyzer to implement "
-                "term_position_offset_arrays(text) (expanding filters — "
-                "shingles/char-ngrams/phrase synonyms — have no single "
-                "character span per emitted token): {e}".format(e=e)
-            ) from e
-    t0 = time.time()
+def _prepare_docs(corpus: DataFrame, cfg: IndexConfig) -> DataFrame:
+    """Source rows + ``doc_id`` (assigned from ``cfg.order_by`` or cast
+    from ``cfg.doc_id_col``) + ``content_sha256`` of the text column —
+    the docs table every build writes."""
     if cfg.doc_id_col is None:
         docs = with_doc_ids(corpus, cfg.order_by, num_partitions=cfg.num_partitions)
-    elif cfg.doc_id_col != "doc_id":
-        docs = corpus.withColumn("doc_id", F.col(cfg.doc_id_col).cast("long"))
     else:
-        docs = corpus.withColumn("doc_id", F.col("doc_id").cast("long"))
-    docs = docs.withColumn(
+        docs = corpus.withColumn("doc_id", F.col(cfg.doc_id_col).cast("long"))
+    return docs.withColumn(
         "content_sha256", F.sha2(F.coalesce(F.col(cfg.text_col), F.lit("")), 256)
     )
-    # granularity fix: parquet input splits follow maxPartitionBytes, not
-    # core count (a 350MB corpus reads as ~5 splits), so every Python stage
-    # downstream would run 1-2 quantized waves with no packing headroom.
-    # Re-partition the (already id-assigned) docs to ~3 tasks/core and cache
-    # THAT — all tokenize passes inherit the good granularity.
-    par = cfg.num_partitions or spark.sparkContext.defaultParallelism * 3
-    docs = docs.repartition(par)
-    # several downstream jobs re-read docs (doclens join, stats, retrieval):
-    # cache it so the docid-assignment + sha pipeline runs once
-    docs.persist()
 
-    # The exploded stream is NOT cached and flows through exactly ONE
-    # shuffle (the pack repartition). Caching it and running
-    # doclens/termstats groupBys over it (3 passes over ~35x the corpus
-    # row count) was the build's scaling killer: allocation/GC pressure in
-    # the single local JVM serialized all executor threads. Instead:
-    # doclens comes from a cheap native-SQL counting pass, and termstats
-    # is an aggregate over the PACKED block table (tiny).
-    #
-    # Empty-stopword default ("auto" -> "arrow"): JVM regex tokenize +
-    # Arrow-native grouping (_make_arrow_grouper) — posting rows through
-    # the one shuffle, zero Python-string churn, the regex out of Python.
-    # Stopwords, stored offsets or a custom analyzer force the Python
-    # inverter (shared analyzer implementation; offsets come from regex
-    # match spans). "jvm" keeps the all-SQL token-row path for A/B runs.
-    plain_chain = not cfg.stopwords and not cfg.with_offsets and cfg.analyzer is None
-    mode = cfg.invert_mode
-    if mode == "auto":
-        mode = "arrow" if plain_chain else "python"
-    elif mode in ("arrow", "jvm") and not plain_chain:
-        raise ValueError(
-            f"invert_mode={mode!r} supports only the plain StandardAnalyzer "
-            "chain (no stopwords/offsets/custom analyzer)"
-        )
-    if mode == "arrow":
+
+def _termstats_from_blocks(postings: DataFrame, field_name: str) -> DataFrame:
+    """(field, term, df, ttf) aggregated over a packed block table."""
+    return (
+        postings.groupBy("term")
+        .agg(F.sum("num_docs").alias("df"), F.sum("ttf_block").alias("ttf"))
+        .select(F.lit(field_name).alias("field"), "term", "df", "ttf")
+    )
+
+
+def _invert_and_pack(
+    docs: DataFrame, cfg: IndexConfig
+) -> tuple[DataFrame, DataFrame]:
+    """The one indexing chain: docs (with ``doc_id``) -> lazy
+    (postings, doclens) frames. ``build_index`` and every segment build
+    (``segments.build_segmented``, NRT micro-segments) run it.
+
+    The exploded stream is NOT cached and flows through exactly ONE
+    shuffle (the pack repartition). Caching it and running
+    doclens/termstats groupBys over it (3 passes over ~35x the corpus
+    row count) was the build's scaling killer: allocation/GC pressure in
+    the single local JVM serialized all executor threads. Instead
+    doclens comes from a separate counting pass, and termstats is an
+    aggregate over the PACKED block table (tiny).
+
+    Front-end: the plain StandardAnalyzer chain takes the JVM regex
+    tokenize + Arrow-native grouping (``_make_arrow_grouper``) — posting
+    rows through the one shuffle, zero Python-string churn. Stopwords,
+    stored offsets or a custom analyzer take the Python inverter (shared
+    analyzer implementation; offsets come from regex match spans).
+    """
+    if not cfg.stopwords and not cfg.with_offsets and cfg.analyzer is None:
         inverted = _jvm_tokenized(docs, cfg).mapInArrow(
             _make_arrow_grouper(cfg), schema=_INVERTED_SCHEMA
         )
-        packer = _make_block_packer(cfg)
-        sort_cols = ["seg_id", "term", "doc_id"]
-    elif mode == "jvm":
-        inverted = _jvm_token_stream(docs, cfg)
-        packer = _make_block_packer_tokens(cfg)
-        sort_cols = ["seg_id", "term", "doc_id", "pos"]
-    elif mode == "python":
+    else:
         inverted = docs.select("doc_id", cfg.text_col).mapInPandas(
             _make_inverter(cfg), schema=_INVERTED_SCHEMA
         )
-        packer = _make_block_packer(cfg)
-        sort_cols = ["seg_id", "term", "doc_id"]
-    else:
-        raise ValueError(f"unknown invert_mode {cfg.invert_mode!r}")
-
     repart_cols = [F.col("seg_id"), F.col("term")]
     if cfg.num_partitions:
         repartitioned = inverted.repartition(cfg.num_partitions, *repart_cols)
     else:
         repartitioned = inverted.repartition(*repart_cols)
-    postings = repartitioned.sortWithinPartitions(*sort_cols).mapInPandas(
-        packer, schema=POSTINGS_SCHEMA
-    )
-    # materialize the index once here: termstats/fieldstats below and every
-    # query read this plan — without the cache they would re-run the build
-    postings.persist()
+    postings = repartitioned.sortWithinPartitions(
+        "seg_id", "term", "doc_id"
+    ).mapInPandas(_make_block_packer(cfg), schema=POSTINGS_SCHEMA)
 
     if not cfg.stopwords and cfg.analyzer is None:
         # JVM-side doclens: the emitted-token count is expressible as a
@@ -962,15 +745,45 @@ def build_index(
             "length",
             "norm",
         )
+    return postings, doclens
 
-    termstats = (
-        postings.groupBy("term")
-        .agg(
-            F.sum("num_docs").alias("df"),
-            F.sum("ttf_block").alias("ttf"),
-        )
-        .select(F.lit(cfg.field_name).alias("field"), "term", "df", "ttf")
-    )
+
+def build_index(
+    spark: SparkSession,
+    corpus: DataFrame,
+    cfg: IndexConfig | None = None,
+    index_dir: str | None = None,
+) -> InvertedIndex:
+    cfg = cfg or IndexConfig()
+    if cfg.with_offsets and cfg.analyzer is not None:
+        # fail at config time with a clear message, not mid-job with a raw
+        # AttributeError from an executor task
+        try:
+            cfg.analyzer.term_position_offset_arrays("")
+        except Exception as e:
+            raise ValueError(
+                "with_offsets=True requires the analyzer to implement "
+                "term_position_offset_arrays(text) (expanding filters — "
+                "shingles/char-ngrams/phrase synonyms — have no single "
+                "character span per emitted token): {e}".format(e=e)
+            ) from e
+    t0 = time.time()
+    # granularity fix: parquet input splits follow maxPartitionBytes, not
+    # core count (a 350MB corpus reads as ~5 splits), so every Python stage
+    # downstream would run 1-2 quantized waves with no packing headroom.
+    # Re-partition the (already id-assigned) docs to ~3 tasks/core and cache
+    # THAT — all tokenize passes inherit the good granularity.
+    par = cfg.num_partitions or spark.sparkContext.defaultParallelism * 3
+    docs = _prepare_docs(corpus, cfg).repartition(par)
+    # several downstream jobs re-read docs (doclens join, stats, retrieval):
+    # cache it so the docid-assignment + sha pipeline runs once
+    docs.persist()
+
+    postings, doclens = _invert_and_pack(docs, cfg)
+    # materialize the index once here: termstats/fieldstats below and every
+    # query read this plan — without the cache they would re-run the build
+    postings.persist()
+    termstats = _termstats_from_blocks(postings, cfg.field_name)
 
     # searcher-wide stats (IndexSearcher.java:1144-1159 sums over leaves):
     # ONE action over a tagged UNION of the two single-row aggregates, so

@@ -24,7 +24,6 @@ The distributed re-expression of Lucene's segment machinery:
 from __future__ import annotations
 
 import time
-from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -32,13 +31,11 @@ from lucene_spark.index.build import (
     IndexConfig,
     InvertedIndex,
     POSTINGS_SCHEMA,
-    _DOCLEN_COUNT_SCHEMA,
-    _INVERTED_SCHEMA,
+    _invert_and_pack,
     _make_block_packer,
-    _make_doclen_counter,
-    _make_inverter,
+    _prepare_docs,
+    _termstats_from_blocks,
 )
-from lucene_spark.index.docids import with_doc_ids
 from lucene_spark.search.similarity import FieldStats
 
 __all__ = ["build_segmented", "load_segments", "merge_segments", "list_segments"]
@@ -89,46 +86,20 @@ def _append_checkpoint(spark: SparkSession, index_dir: str, rows: list[dict]) ->
     ).write.mode("append").parquet(_ckpt_path(index_dir))
 
 
-def _prepare_docs(corpus: DataFrame, cfg: IndexConfig) -> DataFrame:
-    if cfg.doc_id_col is None:
-        docs = with_doc_ids(corpus, cfg.order_by, num_partitions=cfg.num_partitions)
-    else:
-        docs = corpus.withColumn("doc_id", F.col(cfg.doc_id_col).cast("long"))
-    return docs.withColumn(
-        "content_sha256", F.sha2(F.coalesce(F.col(cfg.text_col), F.lit("")), 256)
-    )
-
-
 def _build_one_segment(
     spark: SparkSession, docs: DataFrame, cfg: IndexConfig, seg_dir: str
 ) -> tuple[int, int]:
-    """Build one segment's postings/doclens/termstats; returns (n_docs, n_blocks)."""
-    inverted = docs.select("doc_id", cfg.text_col).mapInPandas(
-        _make_inverter(cfg), schema=_INVERTED_SCHEMA
-    )
-    postings = (
-        inverted.repartition(F.col("seg_id"), F.col("term"))
-        .sortWithinPartitions("seg_id", "term", "doc_id")
-        .mapInPandas(_make_block_packer(cfg), schema=POSTINGS_SCHEMA)
-    )
+    """Build one segment's postings/doclens/termstats with the build's one
+    pipeline (``build._invert_and_pack``); returns (n_docs, n_blocks)."""
+    postings, doclens = _invert_and_pack(docs, cfg)
     postings.write.mode("overwrite").parquet(f"{seg_dir}/postings")
-    doclens = (
-        docs.select("doc_id", cfg.text_col)
-        .mapInPandas(_make_doclen_counter(cfg), schema=_DOCLEN_COUNT_SCHEMA)
-        .select(
-            "doc_id", F.lit(cfg.field_name).alias("field"), "length", "norm"
-        )
-    )
     doclens.write.mode("overwrite").parquet(f"{seg_dir}/doclens")
     # per-segment term stats from the written block table (no re-shuffle of
     # the exploded posting stream)
     written = spark.read.parquet(f"{seg_dir}/postings")
-    termstats = (
-        written.groupBy("term")
-        .agg(F.sum("num_docs").alias("df"), F.sum("ttf_block").alias("ttf"))
-        .select(F.lit(cfg.field_name).alias("field"), "term", "df", "ttf")
+    _termstats_from_blocks(written, cfg.field_name).write.mode("overwrite").parquet(
+        f"{seg_dir}/termstats"
     )
-    termstats.write.mode("overwrite").parquet(f"{seg_dir}/termstats")
     n_docs = docs.count()
     n_blocks = written.count()
     return n_docs, n_blocks
@@ -327,14 +298,7 @@ def merge_segments(
                 F.broadcast(purge_deletes), "doc_id", "left_anti"
             )
             # stats change when rows are reclaimed: recompute from blocks
-            termstats = (
-                written.groupBy("term")
-                .agg(
-                    F.sum("num_docs").alias("df"),
-                    F.sum("ttf_block").alias("ttf"),
-                )
-                .select(F.lit(cfg.field_name).alias("field"), "term", "df", "ttf")
-            )
+            termstats = _termstats_from_blocks(written, cfg.field_name)
         else:
             termstats = (
                 spark.read.parquet(

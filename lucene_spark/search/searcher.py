@@ -67,28 +67,40 @@ _DECODE_POS_SCHEMA = StructType(
 )
 
 
+def _decode_batch(pdf: pd.DataFrame, with_positions: bool) -> pd.DataFrame:
+    """Unpack one batch of postings blocks -> (term, doc_id, freq, norm
+    [, positions]) rows (numpy)."""
+    terms, docs, freqs, norms = [], [], [], []
+    pos: list[np.ndarray] = []
+    for row in pdf.itertuples(index=False):
+        d = forutil.delta_decode(row.first_doc, forutil.for_decode(row.doc_gaps))
+        f = forutil.pfor_decode(row.freqs)
+        n = np.frombuffer(row.norms, dtype=np.uint8)
+        if with_positions:
+            flat = forutil.for_decode(row.positions).astype(np.int32)
+            pos.extend(np.split(flat, np.cumsum(f)[:-1]))
+        terms.append(np.full(len(d), row.term, dtype=object))
+        docs.append(d)
+        freqs.append(f.astype(np.int32))
+        norms.append(n.astype(np.int32))
+    out = pd.DataFrame(
+        {
+            "term": np.concatenate(terms),
+            "doc_id": np.concatenate(docs),
+            "freq": np.concatenate(freqs),
+            "norm": np.concatenate(norms),
+        }
+    )
+    if with_positions:
+        out["positions"] = pd.Series(pos, dtype=object, index=out.index)
+    return out
+
+
 def _decode_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Unpack postings blocks -> (term, doc_id, freq, norm) rows (numpy)."""
     for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        terms, docs, freqs, norms = [], [], [], []
-        for row in pdf.itertuples(index=False):
-            d = forutil.delta_decode(row.first_doc, forutil.for_decode(row.doc_gaps))
-            f = forutil.pfor_decode(row.freqs)
-            n = np.frombuffer(row.norms, dtype=np.uint8)
-            terms.append(np.full(len(d), row.term, dtype=object))
-            docs.append(d)
-            freqs.append(f.astype(np.int32))
-            norms.append(n.astype(np.int32))
-        yield pd.DataFrame(
-            {
-                "term": np.concatenate(terms),
-                "doc_id": np.concatenate(docs),
-                "freq": np.concatenate(freqs),
-                "norm": np.concatenate(norms),
-            }
-        )
+        if len(pdf):
+            yield _decode_batch(pdf, with_positions=False)
 
 
 def _decode_blocks_with_positions(
@@ -103,30 +115,8 @@ def _decode_blocks_with_positions(
     that pushed the worker's peak past what a 2-task local[2] run
     tolerates."""
     for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        terms, docs, freqs, norms = [], [], [], []
-        pos: list[np.ndarray] = []
-        for row in pdf.itertuples(index=False):
-            d = forutil.delta_decode(row.first_doc, forutil.for_decode(row.doc_gaps))
-            f = forutil.pfor_decode(row.freqs)
-            n = np.frombuffer(row.norms, dtype=np.uint8)
-            flat = forutil.for_decode(row.positions).astype(np.int32)
-            pos.extend(np.split(flat, np.cumsum(f)[:-1]))
-            terms.append(np.full(len(d), row.term, dtype=object))
-            docs.append(d)
-            freqs.append(f.astype(np.int32))
-            norms.append(n.astype(np.int32))
-        out = pd.DataFrame(
-            {
-                "term": np.concatenate(terms),
-                "doc_id": np.concatenate(docs),
-                "freq": np.concatenate(freqs),
-                "norm": np.concatenate(norms),
-            }
-        )
-        out["positions"] = pd.Series(pos, dtype=object, index=out.index)
-        yield out
+        if len(pdf):
+            yield _decode_batch(pdf, with_positions=True)
 
 
 _DECODE_COLS = ["term", "first_doc", "doc_gaps", "freqs", "norms"]
@@ -216,7 +206,11 @@ class IndexSearcher:
             else int(prune_engage_min_rows)
         )
         #: filled by the pruned paths when collect_prune_stats is True:
-        #: {"total_blocks", "phase1_blocks", "kept_blocks", "rescore_blocks"}
+        #: block counters ({"total_blocks", "phase1_blocks", "kept_blocks",
+        #: "rescore_blocks"} on the term path) plus, on disjunctions and on
+        #: any fallback, "strategy" (the path taken: "maxscore_essential",
+        #: or why the plain plan ran: "engage_gate", "nosplit", "cap",
+        #: "few_clauses", "few_anchors") and "fell_back"
         self.collect_prune_stats = False
         self.last_prune_stats: dict[str, int] | None = None
         #: filled by the general sloppy path when collect_prune_stats is
@@ -241,8 +235,8 @@ class IndexSearcher:
         self._decoded_cache: dict[str, DataFrame] = {}
         #: per-hot-term block metadata preloaded by preload_block_meta
         #: (serving layout): anchor block keys, the term's global impact
-        #: frontier, and a block-bound histogram — kills the per-query
-        #: metadata jobs in the pruned paths
+        #: frontier, and its block count — kills the per-query metadata
+        #: jobs in the pruned paths
         self._block_meta: dict[tuple[str, str], dict] = {}
         self._avgdl: dict[str, np.float32] = {}
         self._cache: dict[str, np.ndarray] = {}
@@ -846,8 +840,6 @@ class IndexSearcher:
         low-frequency term the high group upgrades to a conjunction unless
         a high minimum-should-match was configured. Absent terms (df 0 —
         the reference's null TermStates) stay in the low group."""
-        import math
-
         fs = self.index.fieldstats[q.field]
         mtf = q.max_term_frequency
         cutoff = int(math.ceil(mtf * float(fs.max_doc)))

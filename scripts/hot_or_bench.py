@@ -13,6 +13,11 @@ Env:    HOT_OR_N_DOCS (default 2_000_000), HOT_OR_CPUS (default 32),
         HOT_OR_INPUT_DIR (default /tmp/hot_or_corpus — keyed by dir name
         only: use a fresh dir when changing HOT_OR_N_DOCS).
 
+The ``pruned`` searcher is built with ``prune_engage_min_rows=0``, so the
+A/B measures the essential split itself at any HOT_OR_N_DOCS. The
+``plain`` column is what the default engagement gate picks anyway when the
+estimated demotable rows are below 2^20.
+
 Prints ONE JSON line: plain/pruned wall seconds (best of 2 after a warm
 pass each), the engaged strategy's block counters, and bit-identity of
 the two rankings.
@@ -112,7 +117,7 @@ def main() -> None:
 
     plain = IndexSearcher(idx)
     plain.optimize_for_serving()
-    pruned = IndexSearcher(idx, prune_min_df=256)
+    pruned = IndexSearcher(idx, prune_min_df=256, prune_engage_min_rows=0)
     pruned.optimize_for_serving()
     pruned.preload_stats()
     pruned.preload_block_meta()

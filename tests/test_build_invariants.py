@@ -2,6 +2,7 @@
 
 import pytest
 
+from lucene_spark.analysis.tokenizer import StandardAnalyzer
 from lucene_spark.index.build import IndexConfig, build_index, load_index
 from lucene_spark.index.checkindex import verify_index
 from lucene_spark.search import query as Q
@@ -52,17 +53,19 @@ def test_deterministic_rebuild(spark):
 
 
 def test_invert_modes_bit_identical(spark):
-    """The three invert front-ends (Python analyzer / pure-JVM token rows /
-    JVM tokenize + Arrow grouping) must produce bit-identical postings,
-    doclens and stats — the arrow default is only an execution strategy."""
+    """The two invert front-ends must produce bit-identical postings,
+    doclens and stats: the default plain chain (JVM tokenize + Arrow
+    grouping, JVM doclens) and the Python analyzer pass with the Python
+    doclen counter, forced here by passing the default analyzer
+    explicitly — the Arrow front-end is only an execution strategy."""
     corpus = spark.createDataFrame(generate_corpus(300, seed=19)).cache()
     corpus.count()
 
-    def fingerprint(mode):
-        cfg = IndexConfig(docs_per_segment=64, invert_mode=mode)
+    def fingerprint(cfg):
         ix = build_index(spark, corpus, cfg)
         rows = sorted(
             (
+                r["field"],
                 r["seg_id"],
                 r["term"],
                 r["block_ord"],
@@ -76,6 +79,8 @@ def test_invert_modes_bit_identical(spark):
                 bytes(r["freqs"]),
                 bytes(r["norms"]),
                 bytes(r["positions"]),
+                bytes(r["offsets"]),
+                tuple(r["impacts"]),
             )
             for r in ix.postings.collect()
         )
@@ -85,18 +90,10 @@ def test_invert_modes_bit_identical(spark):
         ix.postings.unpersist()
         return rows, dl, ix.fieldstats
 
-    py = fingerprint("python")
-    jvm = fingerprint("jvm")
-    arrow = fingerprint("arrow")
-    assert py == arrow
-    assert py == jvm
-
-
-def test_invert_mode_guard(spark):
-    corpus = spark.createDataFrame(generate_corpus(10, seed=2))
-    with pytest.raises(ValueError, match="invert_mode"):
-        build_index(
-            spark,
-            corpus,
-            IndexConfig(invert_mode="arrow", stopwords=frozenset({"the"})),
+    default = fingerprint(IndexConfig(docs_per_segment=64))
+    python = fingerprint(
+        IndexConfig(
+            docs_per_segment=64, analyzer=StandardAnalyzer(max_token_length=255)
         )
+    )
+    assert default == python

@@ -48,12 +48,36 @@ def _decoded_rows(idx):
     }
 
 
+def _block_rows(idx):
+    return sorted(
+        (
+            r["seg_id"],
+            r["term"],
+            r["block_ord"],
+            bytes(r["doc_gaps"]),
+            bytes(r["freqs"]),
+            bytes(r["norms"]),
+            bytes(r["positions"]),
+            tuple(r["impacts"]),
+        )
+        for r in idx.postings.collect()
+    )
+
+
+def _doclen_rows(idx):
+    return sorted((r["doc_id"], r["length"], r["norm"]) for r in idx.doclens.collect())
+
+
 def test_segmented_build_matches_monolithic(spark, seg_index):
     d, idx = seg_index
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     mono = build_index(spark, docs, CFG)
     assert _decoded_rows(idx) == _decoded_rows(mono)
     assert idx.fieldstats["text"] == mono.fieldstats["text"]
+    # byte level: both builds run the same pipeline, so the packed blocks
+    # and the doclens table match exactly, not just their decoded postings
+    assert _block_rows(idx) == _block_rows(mono)
+    assert _doclen_rows(idx) == _doclen_rows(mono)
 
 
 def test_checkpoint_has_one_live_row_per_segment(spark, seg_index):
