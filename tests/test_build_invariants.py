@@ -97,3 +97,31 @@ def test_invert_modes_bit_identical(spark):
         )
     )
     assert default == python
+
+
+def test_stopword_config_takes_python_front_end(spark):
+    """Stopwords route the build onto the Python inverter and Python
+    doclen counter (the JVM chain has no stop filter): stopped terms get
+    no postings, lengths count only emitted tokens, and ``num_partitions``
+    sets the pack shuffle's width."""
+    stop = frozenset({"the", "return"})
+    corpus = spark.createDataFrame(generate_corpus(120, seed=2))
+    cfg = IndexConfig(docs_per_segment=40, stopwords=stop, num_partitions=3)
+    ix = build_index(spark, corpus, cfg)
+
+    report = verify_index(ix)
+    assert all(v == 0 for v in report.values()), report
+    terms = {r["term"] for r in ix.postings.select("term").distinct().collect()}
+    assert terms and not terms & stop
+    assert ix.postings.rdd.getNumPartitions() == 3
+
+    analyzer = StandardAnalyzer(stopwords=stop)
+    texts = {r["doc_id"]: r["content"] for r in ix.docs.collect()}
+    lengths = {r["doc_id"]: r["length"] for r in ix.doclens.collect()}
+    assert lengths == {d: analyzer.emitted_count(t) for d, t in texts.items()}
+    assert any(
+        analyzer.emitted_count(t) < StandardAnalyzer().emitted_count(t)
+        for t in texts.values()
+    )
+    hits = IndexSearcher(ix).search(Q.TermQuery("content", "the"), k=5)
+    assert hits.count() == 0
