@@ -243,7 +243,7 @@ def _get_pruned_searcher(spark, sf_dir) -> IndexSearcher:
         # savings vs ~4 job latencies) would — correctly — route these toy
         # corpora to the plain path; these entries exist to drive-check the
         # pruned plan's arithmetic, so the cost model is bypassed here
-        s = IndexSearcher(idx, prune_min_df=64, prune_engage_min_rows=0)
+        s = IndexSearcher(idx, prune_engage_min_rows=0)
         _PRUNED_CACHE[sf_dir] = s
     return _PRUNED_CACHE[sf_dir]
 

@@ -668,17 +668,25 @@ def _prepare_docs(corpus: DataFrame, cfg: IndexConfig) -> DataFrame:
         docs = with_doc_ids(corpus, cfg.order_by, num_partitions=cfg.num_partitions)
     else:
         docs = corpus.withColumn("doc_id", F.col(cfg.doc_id_col).cast("long"))
+    return _with_content_sha256(docs, cfg.text_col)
+
+
+def _with_content_sha256(docs: DataFrame, text_col: str) -> DataFrame:
+    """``docs`` + ``content_sha256``, the sha256 of the text column (null
+    text hashes as "") — the row invariant every docs table carries."""
     return docs.withColumn(
-        "content_sha256", F.sha2(F.coalesce(F.col(cfg.text_col), F.lit("")), 256)
+        "content_sha256", F.sha2(F.coalesce(F.col(text_col), F.lit("")), 256)
     )
 
 
-def _termstats_from_blocks(postings: DataFrame, field_name: str) -> DataFrame:
-    """(field, term, df, ttf) aggregated over a packed block table."""
-    return (
-        postings.groupBy("term")
-        .agg(F.sum("num_docs").alias("df"), F.sum("ttf_block").alias("ttf"))
-        .select(F.lit(field_name).alias("field"), "term", "df", "ttf")
+def _termstats_from_blocks(postings: DataFrame) -> DataFrame:
+    """(field, term, df, ttf) aggregated over a packed block table,
+    grouped by the blocks' own ``field`` column, so one call covers a
+    multi-field table. Used by every build and merge, and by
+    ``IndexSearcher.optimize_for_serving`` to re-derive the stats from
+    the compacted serving blocks."""
+    return postings.groupBy("field", "term").agg(
+        F.sum("num_docs").alias("df"), F.sum("ttf_block").alias("ttf")
     )
 
 
@@ -783,7 +791,7 @@ def build_index(
     # materialize the index once here: termstats/fieldstats below and every
     # query read this plan — without the cache they would re-run the build
     postings.persist()
-    termstats = _termstats_from_blocks(postings, cfg.field_name)
+    termstats = _termstats_from_blocks(postings)
 
     # searcher-wide stats (IndexSearcher.java:1144-1159 sums over leaves):
     # ONE action over a tagged UNION of the two single-row aggregates, so

@@ -97,7 +97,7 @@ def _build_one_segment(
     # per-segment term stats from the written block table (no re-shuffle of
     # the exploded posting stream)
     written = spark.read.parquet(f"{seg_dir}/postings")
-    _termstats_from_blocks(written, cfg.field_name).write.mode("overwrite").parquet(
+    _termstats_from_blocks(written).write.mode("overwrite").parquet(
         f"{seg_dir}/termstats"
     )
     n_docs = docs.count()
@@ -298,7 +298,7 @@ def merge_segments(
                 F.broadcast(purge_deletes), "doc_id", "left_anti"
             )
             # stats change when rows are reclaimed: recompute from blocks
-            termstats = _termstats_from_blocks(written, cfg.field_name)
+            termstats = _termstats_from_blocks(written)
         else:
             termstats = (
                 spark.read.parquet(

@@ -45,7 +45,7 @@ from pyspark.sql.types import (
 )
 
 from lucene_spark.index import forutil
-from lucene_spark.index.build import InvertedIndex
+from lucene_spark.index.build import InvertedIndex, _termstats_from_blocks
 from lucene_spark.search import query as Q
 from lucene_spark.search.similarity import BM25Similarity
 
@@ -159,13 +159,6 @@ class _Ctx:
 
 
 class IndexSearcher:
-    #: default df gate for block-max pruning — below it, the extra
-    #: scheduler round-trips (phase-1 bound job + theta collect) cost more
-    #: than decoding every block; at 100 TB scale hot terms clear this
-    #: easily. Override per-searcher via the constructor (tests/benches
-    #: lower it to engage the two-phase path on small corpora).
-    PRUNE_MIN_DF = 1 << 16
-
     #: engagement gate (the cost decision in
     #: ``search/BooleanScorerSupplier.java:288-318``): the pruned paths
     #: pay ~4 sequential job barriers of phase latency that the plain
@@ -174,13 +167,14 @@ class IndexSearcher:
     #: memo — clear this count (~256 postings blocks, roughly 4 job
     #: latencies of Arrow decode throughput). Below it the plain decode
     #: is strictly cheaper regardless of how well the bounds prune.
+    #: Override per searcher via ``prune_engage_min_rows`` (tests lower
+    #: it to engage the pruned paths on small corpora).
     PRUNE_ENGAGE_MIN_ROWS = 1 << 20
 
     def __init__(
         self,
         index: InvertedIndex,
         similarity: object | None = None,
-        prune_min_df: int | None = None,
         query_cache=None,
         prune_engage_min_rows: int | None = None,
     ):
@@ -197,30 +191,26 @@ class IndexSearcher:
         self.index = index
         self.query_cache = query_cache
         self.sim = similarity or BM25Similarity()
-        self.prune_min_df = (
-            self.PRUNE_MIN_DF if prune_min_df is None else int(prune_min_df)
-        )
         self.prune_engage_min_rows = (
             self.PRUNE_ENGAGE_MIN_ROWS
             if prune_engage_min_rows is None
             else int(prune_engage_min_rows)
         )
-        #: filled by the pruned paths when collect_prune_stats is True:
-        #: block counters ({"total_blocks", "phase1_blocks", "kept_blocks",
-        #: "rescore_blocks"} on the term path) plus, on disjunctions and on
-        #: any fallback, "strategy" (the path taken: "maxscore_essential",
-        #: or why the plain plan ran: "engage_gate", "nosplit", "cap",
-        #: "few_clauses", "few_anchors") and "fell_back"
-        self.collect_prune_stats = False
-        self.last_prune_stats: dict[str, int] | None = None
-        #: filled by the general sloppy path when collect_prune_stats is
-        #: True: {"docs_with_all_slots", "candidates"} — evidence the JVM
-        #: pre-filter shrank the Python matcher's input
-        self.last_sloppy_stats: dict[str, int] | None = None
-        #: filled by bloom fast-fail segment pruning (index.blooms) when
-        #: collect_prune_stats is True:
-        #: {"segments_with_bloom", "segments_excluded"}
-        self.last_bloom_stats: dict[str, int] | None = None
+        #: the strategy record of the last search()/search_many() call,
+        #: filled only while collect_stats is True (count jobs over the
+        #: same frames; the returned plan is unchanged):
+        #: - pruned paths: block counters ("total_blocks", "phase1_blocks",
+        #:   "kept_blocks", "rescore_blocks"; disjunctions add
+        #:   "essential_blocks", "n_candidates") and, on disjunctions and
+        #:   any fallback, "strategy" ("maxscore_essential", or why the
+        #:   plain plan ran: "engage_gate", "nosplit", "cap",
+        #:   "few_clauses", "few_anchors") and "fell_back";
+        #: - general sloppy phrase: "docs_with_all_slots", "candidates"
+        #:   (evidence the JVM pre-filter shrank the matcher's input);
+        #: - bloom segment pruning: "segments_with_bloom",
+        #:   "segments_excluded"
+        self.collect_stats = False
+        self.last_stats: dict = {}
         #: persisted frames whose plans a prior call returned (the query
         #: cache's evictions); unpersisted at the next search()/
         #: search_many() entry so none outlives the plan that reads it
@@ -233,10 +223,8 @@ class IndexSearcher:
         #: (term, doc_id, freq, norm, positions) rows that every _decoded
         #: caller filters instead of re-decoding blocks per query
         self._decoded_cache: dict[str, DataFrame] = {}
-        #: per-hot-term block metadata preloaded by preload_block_meta
-        #: (serving layout): anchor block keys, the term's global impact
-        #: frontier, and its block count — kills the per-query metadata
-        #: jobs in the pruned paths
+        #: per-term block metadata memo of _block_meta_for (anchor block
+        #: keys, impact frontier), at most BLOCK_META_MAX_TERMS entries
         self._block_meta: dict[tuple[str, str], dict] = {}
         self._avgdl: dict[str, np.float32] = {}
         self._cache: dict[str, np.ndarray] = {}
@@ -273,6 +261,7 @@ class IndexSearcher:
     ) -> DataFrame:
         """Top-k (doc_id, score), score desc / doc_id asc, searchAfter anchor."""
         self._drain_deferred_unpersist()
+        self.last_stats = {}
         # pruning is unsafe with deletes: a deleted doc could set the
         # phase-1 bound and prune blocks holding live competitive docs;
         # the pruned paths also assume float-scalar per-term weights, so
@@ -319,6 +308,9 @@ class IndexSearcher:
         # arrays) — multi-job pruned paths pay that planning cost per job
         compact = old.coalesce(p).localCheckpoint(eager=True)
         self.index.postings = compact
+        # termstats is a lazy aggregate over the build's postings: once
+        # those are unpersisted, every read would re-run the whole build
+        self.index.termstats = _termstats_from_blocks(compact)
         try:
             old.unpersist()
         except Exception:
@@ -372,8 +364,12 @@ class IndexSearcher:
         self._stats_all_loaded = True
         return True
 
-    #: anchor blocks kept per hot term by preload_block_meta
+    #: anchor blocks kept per term by _block_meta_for
     N_ANCHORS = 16
+
+    #: budget of the block-metadata memo (~1 KB per term); past it a
+    #: pruned query still loads its terms' metadata but does not keep it
+    BLOCK_META_MAX_TERMS = 1 << 14
 
     #: candidate budget of the disjunction essential split: at most
     #: ``min(MAX_CANDIDATES, max(16_384, 64 * k))`` docs may clear the
@@ -382,112 +378,124 @@ class IndexSearcher:
     #: one-shuffle disjunction is cheaper.
     MAX_CANDIDATES = 100_000
 
-    def preload_block_meta(self, max_terms: int = 1 << 14) -> int:
-        """Serving layout, part 2: per-HOT-TERM block metadata into driver
-        memory, so pruned-path queries spend zero Spark jobs on metadata
-        (the position Lucene's in-RAM skip/impact data occupies,
-        ``search/MaxScoreCache.java:59-140``).
+    def preload_block_meta(self) -> int:
+        """Serving layout, part 2: eager warm-up of the block-metadata memo
+        (:meth:`_block_meta_for`) for the hot terms in the stats memo —
+        those with df >= ``prune_engage_min_rows``, the only single terms
+        the pruned paths engage for — hottest first, up to
+        ``BLOCK_META_MAX_TERMS``. Two one-time jobs per field. Returns the
+        number of terms with metadata."""
+        gate = max(self.prune_engage_min_rows, 1)
+        hot = sorted(
+            (
+                (df, fld, t)
+                for (fld, t), (df, _) in self._stats_memo.items()
+                if df >= gate
+            ),
+            reverse=True,
+        )[: self.BLOCK_META_MAX_TERMS]
+        by_field: dict[str, list[str]] = {}
+        for _, fld, t in hot:
+            by_field.setdefault(fld, []).append(t)
+        return sum(len(self._block_meta_for(f, ts)) for f, ts in by_field.items())
 
-        Per term with df > prune_min_df (the only terms the pruned paths
-        ever engage for), three things — all WEIGHT-INDEPENDENT, since
-        score = weight * g(freq, norm) with g monotone, so block impact
-        order at weight=1 is block impact order at any weight:
+    def _block_meta_for(self, field: str, terms: list[str]) -> dict[str, dict]:
+        """The one block-metadata source of the pruned paths (the position
+        Lucene's in-RAM skip/impact data occupies,
+        ``search/MaxScoreCache.java:59-140``): per term, memoized in
+        ``_block_meta``, the entries are
 
-        - the top-N_ANCHORS block keys by impact bound (phase-1 anchors);
-        - the term's global (freq, norm) impact frontier as max-freq per
-          norm byte (<= 256 pairs) — the term's EXACT max score bound at
-          any weight is the float32 max over these pairs, identical to
-          the JVM's max-over-blocks of ``_block_ub``;
-        - the term's block count.
+        - ``anchors``: the top-``N_ANCHORS`` block keys by impact bound
+          (phase-1 anchors), ties broken by (seg_id, block_ord);
+        - ``frontier_f`` / ``frontier_n``: the term's global (freq, norm)
+          impact frontier as max-freq per norm byte (<= 256 pairs) — the
+          term's EXACT max score bound at any weight is the float32 max
+          over these pairs (:meth:`_term_max_bound`).
 
-        Memory: O(hot terms) * ~1 KB; hot terms are the df > 2^16 tail of
-        a Zipfian vocabulary, capped at ``max_terms``. Two one-time jobs
-        per field. Returns the number of terms loaded.
+        Both are WEIGHT-INDEPENDENT, since score = weight * g(freq, norm)
+        with g monotone, so block impact order at weight=1 is block
+        impact order at any weight. Terms missing from the memo load with
+        two jobs (anchors, frontier); terms without postings are absent
+        from the result. Past ``BLOCK_META_MAX_TERMS`` memo entries a load
+        is returned but not kept.
 
-        Snapshot semantics (like a point-in-time IndexReader): the loaded
-        metadata describes THIS index handle's postings. Segment merges /
+        A query that wants more than ``N_ANCHORS`` anchor blocks (k above
+        ~500) gets the ``N_ANCHORS`` there are, and results stay exact:
+        an under-filled phase 1 (fewer than k hits) drops the term path's
+        theta to -inf, so every block is kept, and makes the disjunction
+        path fall back to the plain plan (``few_anchors``).
+
+        Snapshot semantics (like a point-in-time IndexReader): the memo
+        describes THIS index handle's postings. Segment merges /
         addIndexes return new InvertedIndex handles, and deletes disable
         the pruned paths entirely, so there is no staleness path short of
         mutating ``index.postings`` by hand — build a fresh searcher then.
         """
-        gate = self.prune_min_df
-        cand = sorted(
-            (
-                (df, fld, t)
-                for (fld, t), (df, _) in self._stats_memo.items()
-                if df > gate
-            ),
-            reverse=True,
-        )[:max_terms]
-        by_field: dict[str, list[str]] = {}
-        for _, fld, t in cand:
-            by_field.setdefault(fld, []).append(t)
-        n_loaded = 0
+        out = {
+            t: self._block_meta[(field, t)]
+            for t in terms
+            if (field, t) in self._block_meta
+        }
+        missing = [t for t in terms if t not in out]
+        if not missing:
+            return out
         one = F.lit(1.0).cast("float")
-        for field, terms in by_field.items():
-            blocks = self._blocks(field, F.col("term").isin(terms)).withColumn(
-                "_sat", self._block_ub(field, one)
+        blocks = self._blocks(field, F.col("term").isin(missing)).withColumn(
+            "_sat", self._block_ub(field, one)
+        )
+        wnd = Window.partitionBy("term").orderBy(
+            F.col("_sat").desc(), F.col("seg_id").asc(), F.col("block_ord").asc()
+        )
+        a_rows = (
+            blocks.withColumn("_rk", F.row_number().over(wnd))
+            .filter(F.col("_rk") <= self.N_ANCHORS)
+            .select("term", "seg_id", "block_ord", "_rk")
+            .collect()
+        )
+        pair_idx = F.sequence(
+            F.lit(1), (F.size(F.col("impacts")) / F.lit(2)).cast("int")
+        )
+        fr_rows = (
+            blocks.select("term", F.explode(pair_idx).alias("i"), "impacts")
+            .select(
+                "term",
+                F.element_at(
+                    F.col("impacts"), (F.col("i") * 2 - 1).cast("int")
+                ).alias("f"),
+                F.element_at(F.col("impacts"), (F.col("i") * 2).cast("int")).alias("n"),
             )
-            wnd = Window.partitionBy("term").orderBy(
-                F.col("_sat").desc(), F.col("seg_id").asc(), F.col("block_ord").asc()
+            .groupBy("term", "n")
+            .agg(F.max("f").alias("f"))
+            .collect()
+        )
+        anchors: dict[str, list] = {}
+        for r in sorted(a_rows, key=lambda r: r["_rk"]):
+            anchors.setdefault(r["term"], []).append(
+                (int(r["seg_id"]), int(r["block_ord"]))
             )
-            a_rows = (
-                blocks.withColumn("_rk", F.row_number().over(wnd))
-                .withColumn("_nb", F.count("*").over(Window.partitionBy("term")))
-                .filter(F.col("_rk") <= self.N_ANCHORS)
-                .select("term", "seg_id", "block_ord", "_rk", "_nb")
-                .collect()
-            )
-            pair_idx = F.sequence(
-                F.lit(1), (F.size(F.col("impacts")) / F.lit(2)).cast("int")
-            )
-            fr_rows = (
-                blocks.select("term", F.explode(pair_idx).alias("i"), "impacts")
-                .select(
-                    "term",
-                    F.element_at(
-                        F.col("impacts"), (F.col("i") * 2 - 1).cast("int")
-                    ).alias("f"),
-                    F.element_at(
-                        F.col("impacts"), (F.col("i") * 2).cast("int")
-                    ).alias("n"),
-                )
-                .groupBy("term", "n")
-                .agg(F.max("f").alias("f"))
-                .collect()
-            )
-            anchors: dict[str, list] = {}
-            n_blocks: dict[str, int] = {}
-            for r in sorted(a_rows, key=lambda r: r["_rk"]):
-                anchors.setdefault(r["term"], []).append(
-                    (int(r["seg_id"]), int(r["block_ord"]))
-                )
-                n_blocks[r["term"]] = int(r["_nb"])
-            frontier: dict[str, list] = {}
-            for r in fr_rows:
-                frontier.setdefault(r["term"], []).append((int(r["f"]), int(r["n"])))
-            for t in terms:
-                if t in anchors and t in frontier:
-                    fr = np.asarray(frontier[t], dtype=np.int64)
-                    self._block_meta[(field, t)] = {
-                        "anchors": anchors[t],
-                        "frontier_f": fr[:, 0].astype(np.float32),
-                        "frontier_n": fr[:, 1],
-                        "n_blocks": n_blocks[t],
-                    }
-                    n_loaded += 1
-        return n_loaded
+        frontier: dict[str, list] = {}
+        for r in fr_rows:
+            frontier.setdefault(r["term"], []).append((int(r["f"]), int(r["n"])))
+        for t in missing:
+            if t in anchors and t in frontier:
+                fr = np.asarray(frontier[t], dtype=np.int64)
+                out[t] = {
+                    "anchors": anchors[t],
+                    "frontier_f": fr[:, 0].astype(np.float32),
+                    "frontier_n": fr[:, 1],
+                }
+                if len(self._block_meta) < self.BLOCK_META_MAX_TERMS:
+                    self._block_meta[(field, t)] = out[t]
+        return out
 
-    def _preloaded_maxub(self, field: str, term: str, w: float) -> float | None:
-        """The term's exact global max score bound at weight ``w`` from the
-        preloaded impact frontier — float32 op order identical to the JVM
-        ``_block_ub`` (same BM25Similarity.score kernel), so the value
-        equals the max over all blocks' bounds bit-for-bit."""
-        m = self._block_meta.get((field, term))
-        if m is None:
-            return None
-        inv = self._cache[field][m["frontier_n"]]
-        return float(np.max(self.sim.score(m["frontier_f"], inv, F32(w))))
+    def _term_max_bound(self, field: str, meta: dict, w: float) -> float:
+        """A term's exact global max score bound at weight ``w`` from its
+        impact frontier (``meta``, a :meth:`_block_meta_for` entry) —
+        float32 op order identical to the JVM ``_block_ub`` (same
+        BM25Similarity.score kernel), so the value equals the max over
+        all blocks' bounds bit-for-bit."""
+        inv = self._cache[field][meta["frontier_n"]]
+        return float(np.max(self.sim.score(meta["frontier_f"], inv, F32(w))))
 
     def _live(self, df: DataFrame) -> DataFrame:
         """Live-docs filter (Lucene90LiveDocsFormat analog): anti-join the
@@ -600,11 +608,10 @@ class IndexSearcher:
             for seg, fz in blooms[field].items()
             if not any(fz.contains(t) for t in tb)
         ]
-        if self.collect_prune_stats:
-            self.last_bloom_stats = {
-                "segments_with_bloom": len(blooms[field]),
-                "segments_excluded": len(excluded),
-            }
+        if self.collect_stats:
+            self.last_stats.update(
+                segments_with_bloom=len(blooms[field]), segments_excluded=len(excluded)
+            )
         if not excluded:
             return None
         return ~F.col("seg_id").isin(excluded)
@@ -1098,18 +1105,14 @@ class IndexSearcher:
             )
             .select("doc_id")
         )
-        if self.collect_prune_stats:
+        if self.collect_stats:
             n_all = (
                 per_slot.groupBy("doc_id")
                 .agg(F.count("*").alias("_ns"))
                 .filter(F.col("_ns") == F.lit(k))
                 .count()
             )
-            n_cand = cand.count()
-            self.last_sloppy_stats = {
-                "docs_with_all_slots": n_all,
-                "candidates": n_cand,
-            }
+            self.last_stats.update(docs_with_all_slots=n_all, candidates=cand.count())
         d = d.join(cand, "doc_id", "left_semi")
 
         out_schema = StructType(
@@ -1328,37 +1331,39 @@ class IndexSearcher:
         their k-th score theta in-plan; phase 2 decodes just the remaining
         blocks whose competitive-impact upper bound can still reach theta.
         Sound because the per-block bound dominates every score inside the
-        block (BM25 is monotone in freq and 1/norm). With
-        ``collect_prune_stats`` on, count jobs over the same frames fill
-        ``last_prune_stats``; the returned plan is unchanged.
+        block (BM25 is monotone in freq and 1/norm). Phase-1 anchors come
+        from :meth:`_block_meta_for`. With ``collect_stats`` on, count
+        jobs over the same frames fill ``last_stats``; the returned plan
+        is unchanged.
         """
         ctx = self._resolve_stats(q)
         field = q.field
-        fs = self.index.fieldstats[field]
         df, _ = ctx.term_stats.get((field, q.term), (0, 0))
-        w = self.sim.weight(F32(q.boost), self.sim.idf(df, fs.doc_count))
-        blocks = self._blocks(field, F.col("term") == q.term, terms=[q.term])
         # small postings: decode everything (pruning wouldn't pay)
-        if df <= max(4 * k, self.prune_min_df):
+        if df <= 4 * k:
             return self._scored(q, F32(1.0), ctx)
         # engagement gate: the two-phase split can never avoid more than
         # df rows of decode, so below the gate its extra plan complexity
         # (theta broadcast + two decode branches) is pure loss — zero-job
         # decision from the stats memo
         if df < self.prune_engage_min_rows:
-            if self.collect_prune_stats:
-                self.last_prune_stats = {
-                    "total_blocks": -(-df // forutil.BLOCK_SIZE),
-                    "phase1_blocks": 0,
-                    "kept_blocks": 0,
-                    "rescore_blocks": 0,
-                    "fell_back": True,
-                    "strategy": "engage_gate",
-                    "est_demotable_rows": df,
-                    "gate_rows": self.prune_engage_min_rows,
-                }
+            if self.collect_stats:
+                self.last_stats.update(
+                    total_blocks=-(-df // forutil.BLOCK_SIZE),
+                    phase1_blocks=0,
+                    kept_blocks=0,
+                    rescore_blocks=0,
+                    fell_back=True,
+                    strategy="engage_gate",
+                    est_demotable_rows=df,
+                    gate_rows=self.prune_engage_min_rows,
+                )
             return self._scored(q, F32(1.0), ctx)
-        blocks = blocks.withColumn("_ub", self._block_ub(field, w))
+        fs = self.index.fieldstats[field]
+        w = self.sim.weight(F32(q.boost), self.sim.idf(df, fs.doc_count))
+        blocks = self._blocks(
+            field, F.col("term") == q.term, terms=[q.term]
+        ).withColumn("_ub", self._block_ub(field, w))
         # with competitive-impact bounds a block's _ub IS its max real
         # score, so the global top-k live in the top-ub blocks; anchor
         # enough of them that theta lands at ~the true k-th
@@ -1367,26 +1372,8 @@ class IndexSearcher:
             min(16, 2 * k),
             math.ceil((4 * k) / forutil.BLOCK_SIZE),
         )
-        meta = self._block_meta.get((field, q.term))
-        if meta is not None and (
-            len(meta["anchors"]) >= n_phase1
-            or len(meta["anchors"]) >= meta["n_blocks"]
-        ):
-            # serving layout: anchors preloaded (impact order is
-            # weight-independent), the metadata job disappears
-            p1_keys = meta["anchors"][:n_phase1]
-        else:
-            # deterministic tie-break, so equal upper bounds always pick
-            # the same anchor blocks
-            p1_keys = [
-                (r["seg_id"], r["block_ord"])
-                for r in blocks.orderBy(
-                    F.col("_ub").desc(), F.col("seg_id").asc(), F.col("block_ord").asc()
-                )
-                .limit(n_phase1)
-                .select("seg_id", "block_ord")
-                .collect()
-            ]
+        meta = self._block_meta_for(field, [q.term])[q.term]
+        p1_keys = meta["anchors"][:n_phase1]
         key = F.concat_ws("#", F.col("seg_id"), F.col("block_ord"))
         p1_set = [f"{s}#{b}" for s, b in p1_keys]
         score = self._score_col(field, F.col("freq"), F.col("norm"), w).alias("score")
@@ -1398,7 +1385,7 @@ class IndexSearcher:
         )
         # theta stays IN-PLAN — the k-th phase-1 score is a broadcast
         # scalar, so the whole pruned term query is ONE Spark job (with
-        # preloaded anchors there is no planning job either).
+        # memoized anchors there is no metadata job either).
         # Under-filled anchors (fewer than k phase-1 hits) degrade theta
         # to -inf in-plan: phase 2 then keeps every non-anchor block and
         # the union equals the unpruned full decode.
@@ -1411,13 +1398,13 @@ class IndexSearcher:
         remaining = blocks.crossJoin(F.broadcast(th)).filter(
             (F.col("_ub") >= F.col("_theta")) & ~key.isin(p1_set)
         )
-        if self.collect_prune_stats:
-            self.last_prune_stats = {
-                "total_blocks": blocks.count(),
-                "phase1_blocks": len(p1_keys),
-                "kept_blocks": remaining.count(),
-                "rescore_blocks": 0,
-            }
+        if self.collect_stats:
+            self.last_stats.update(
+                total_blocks=blocks.count(),
+                phase1_blocks=len(p1_keys),
+                kept_blocks=remaining.count(),
+                rescore_blocks=0,
+            )
         return top1.unionByName(_decode(remaining).select("doc_id", score))
 
     def _disjunction_topk_pruned(
@@ -1478,17 +1465,14 @@ class IndexSearcher:
             if mode_tie is not None
             else self._scored_boolean(Q.BooleanQuery.of(should=clauses), F32(1.0), ctx)
         )
-        if total_df <= max(4 * k, self.prune_min_df):
+        if total_df <= 4 * k:
             return fallback
 
         def fall_back(strategy: str, **stats) -> DataFrame:
-            if self.collect_prune_stats:
-                self.last_prune_stats = {
-                    "rescore_blocks": 0,
-                    **stats,
-                    "fell_back": True,
-                    "strategy": strategy,
-                }
+            if self.collect_stats:
+                self.last_stats.update(
+                    rescore_blocks=0, **stats, fell_back=True, strategy=strategy
+                )
             return fallback
 
         def gate_skip(est_rows: int) -> DataFrame:
@@ -1521,46 +1505,18 @@ class IndexSearcher:
         # blocks — k impact-ordered blocks (one could hold each top doc)
         # plus slack for ties/truncated frontiers
         n_phase1 = max(2 * k // forutil.BLOCK_SIZE + 1, min(16, 2 * k))
-        pre_ok = n_phase1 <= self.N_ANCHORS and all(
-            (field, t) in self._block_meta for t in terms
-        )
-        if pre_ok:
-            # serving layout: anchors + exact max bounds from preloaded
-            # metadata — the per-query metadata job disappears
-            maxub = {}
-            anchors_by_term: dict[str, list] = {}
-            for t in terms:
-                ub = self._preloaded_maxub(field, t, weights[t])
-                if ub is not None and ub > 0.0:
-                    maxub[t] = ub
-                anchors_by_term[t] = self._block_meta[(field, t)]["anchors"]
-        else:
-            # ONE metadata job yields both the per-clause top-block anchors
-            # and every clause's global max bound (the rank-1 row's _ub)
-            wnd = Window.partitionBy("term").orderBy(
-                F.col("_ub").desc(), F.col("seg_id").asc(), F.col("block_ord").asc()
-            )
-            meta_rows = (
-                blocks.withColumn("_rk", F.row_number().over(wnd))
-                .filter(F.col("_rk") <= n_phase1)
-                .select("term", "seg_id", "block_ord", "_ub", "_rk")
-                .collect()
-            )
-            maxub = {
-                r["term"]: float(r["_ub"]) for r in meta_rows if r["_rk"] == 1
-            }
-            anchors_by_term = {}
-            for r in sorted(meta_rows, key=lambda r: r["_rk"]):
-                anchors_by_term.setdefault(r["term"], []).append(
-                    (r["seg_id"], r["block_ord"])
-                )
+        meta = self._block_meta_for(field, [t for t in terms if dfs[t] > 0])
+        maxub = {}
+        for t, m in meta.items():
+            ub = self._term_max_bound(field, m, weights[t])
+            if ub > 0.0:
+                maxub[t] = ub
         if len(maxub) < 2:
             return fall_back("few_clauses")  # <=1 clause has postings
         # engagement gate, refined: MAXSCORE never demotes the strongest
         # clause (it stays essential at any theta), so the avoidable rows
-        # are at most the OTHER clauses' postings. With preloaded metadata
-        # this refinement is still zero jobs; without, the one metadata
-        # job above is already paid either way.
+        # are at most the OTHER clauses' postings. With memoized metadata
+        # this refinement is still zero jobs.
         strongest = max(maxub, key=lambda t: maxub[t])
         demotable = total_df - dfs.get(strongest, 0)
         if demotable < self.prune_engage_min_rows:
@@ -1595,9 +1551,7 @@ class IndexSearcher:
         # of different clauses rarely share a doc window — and no split
         # could ever engage.)
         key = F.concat_ws("#", F.col("seg_id"), F.col("block_ord"))
-        a_keys = [
-            f"{s}#{b}" for s, b in anchors_by_term.get(strongest, [])[:n_phase1]
-        ]
+        a_keys = [f"{s}#{b}" for s, b in meta[strongest]["anchors"][:n_phase1]]
         # the k anchor docs stay IN-PLAN (sort + limit behind broadcast
         # joins) instead of round-tripping through the driver: theta then
         # costs ONE Spark job barrier, not two. The tiny limit-k side
@@ -1631,13 +1585,12 @@ class IndexSearcher:
             .collect()
         )
         stats: dict = {}
-        if self.collect_prune_stats:
+        if self.collect_stats:
             # phase-1 decode cost actually paid: the strongest clause's
             # anchor blocks plus every clause's probe blocks
             stats = {
                 "total_blocks": blocks.count(),
                 "phase1_blocks": len(a_keys) + probe.count(),
-                "preloaded": pre_ok,
             }
         if len(rows) < k:
             # fewer than k exact anchor scores (one row per anchor doc)
@@ -1680,7 +1633,7 @@ class IndexSearcher:
             .limit(cap + 1)
             .collect()
         )
-        if self.collect_prune_stats:
+        if self.collect_stats:
             stats["essential_blocks"] = e_blocks.count()
             stats["n_candidates"] = len(cand_rows)
         if len(cand_rows) > cap:
@@ -1700,13 +1653,13 @@ class IndexSearcher:
             & (F.col("doc_id") <= F.col("last_doc")),
             "left_semi",
         )
-        if self.collect_prune_stats:
-            self.last_prune_stats = {
-                **stats,
-                "rescore_blocks": needed.count(),
-                "fell_back": False,
-                "strategy": "maxscore_essential",
-            }
+        if self.collect_stats:
+            self.last_stats.update(
+                stats,
+                rescore_blocks=needed.count(),
+                fell_back=False,
+                strategy="maxscore_essential",
+            )
         n_agg = sum_max(
             _decode(needed).join(cand_ids, "doc_id", "left_semi"), "n_sum", "n_max"
         )
@@ -1746,6 +1699,7 @@ class IndexSearcher:
         Other query types raise — run those individually.
         """
         self._drain_deferred_unpersist()
+        self.last_stats = {}
         if not getattr(self.sim, "scalar_weights", True):
             raise NotImplementedError(
                 "search_many batches per-term weights as one float column; "

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window
 
-from lucene_spark.index.build import IndexConfig
+from lucene_spark.index.build import IndexConfig, _with_content_sha256
 from lucene_spark.index.segments import _append_checkpoint, _build_one_segment
 
 __all__ = ["micro_segment_writer", "start_nrt_ingest", "EPOCH_BASE"]
@@ -58,13 +58,11 @@ def micro_segment_writer(
             # deterministic batch-local order, densified by the rank below
             ranked = batch_df.withColumn("_arrival", F.monotonically_increasing_id())
             w = Window.orderBy("_arrival")
-        docs = (
-            ranked.withColumn("doc_id", F.row_number().over(w) - 1 + F.lit(base))
-            .drop("_arrival")
-            .withColumn(
-                "content_sha256",
-                F.sha2(F.coalesce(F.col(cfg.text_col), F.lit("")), 256),
-            )
+        docs = _with_content_sha256(
+            ranked.withColumn(
+                "doc_id", F.row_number().over(w) - 1 + F.lit(base)
+            ).drop("_arrival"),
+            cfg.text_col,
         )
         # cache before counting: the overflow check and the segment build
         # both consume this plan — without the cache each would re-run the

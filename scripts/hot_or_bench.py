@@ -117,7 +117,7 @@ def main() -> None:
 
     plain = IndexSearcher(idx)
     plain.optimize_for_serving()
-    pruned = IndexSearcher(idx, prune_min_df=256, prune_engage_min_rows=0)
+    pruned = IndexSearcher(idx, prune_engage_min_rows=0)
     pruned.optimize_for_serving()
     pruned.preload_stats()
     pruned.preload_block_meta()
@@ -142,10 +142,10 @@ def main() -> None:
             should=[Q.TermQuery("content", a), Q.TermQuery("content", b)]
         )
         # stats harvest (untimed; also warms the pruned path)
-        pruned.collect_prune_stats = True
+        pruned.collect_stats = True
         rows_pruned = pruned.search(hot_or, k=10).collect()
-        stats = dict(pruned.last_prune_stats or {})
-        pruned.collect_prune_stats = False
+        stats = dict(pruned.last_stats)
+        pruned.collect_stats = False
         rows_plain = plain.search(hot_or, k=10).collect()  # warm plain path
         plain_sec = best_of(lambda: plain.search(hot_or, k=10, prune=False))
         pruned_sec = best_of(lambda: pruned.search(hot_or, k=10))

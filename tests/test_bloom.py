@@ -64,10 +64,10 @@ def bloom_idx(spark):
 
 def test_bloom_prunes_segments_and_preserves_results(bloom_idx):
     s = IndexSearcher(bloom_idx)
-    s.collect_prune_stats = True
+    s.collect_stats = True
     hits = s.search(Q.TermQuery("text", "needle"), k=10).collect()
     assert [r.doc_id for r in hits] == [17]
-    st = s.last_bloom_stats
+    st = s.last_stats
     assert st["segments_with_bloom"] == 4
     # fpp 0.1023 -> the 3 needle-free segments are overwhelmingly NO;
     # require at least pruning of one (no false negatives is the hard bound)
@@ -80,9 +80,9 @@ def test_bloom_prunes_segments_and_preserves_results(bloom_idx):
 
 def test_bloom_absent_term_excludes_all_segments(bloom_idx):
     s = IndexSearcher(bloom_idx)
-    s.collect_prune_stats = True
+    s.collect_stats = True
     assert s.search(Q.TermQuery("text", "zzzznotaterm"), k=10).count() == 0
-    assert s.last_bloom_stats["segments_excluded"] == 4
+    assert s.last_stats["segments_excluded"] == 4
 
 
 def test_bloom_plan_prunes_before_decode(bloom_idx):
@@ -96,7 +96,7 @@ def test_bloom_plan_prunes_before_decode(bloom_idx):
 
 def test_term_in_set_uses_union_of_blooms(bloom_idx):
     s = IndexSearcher(bloom_idx)
-    s.collect_prune_stats = True
+    s.collect_stats = True
     got = {
         r.doc_id
         for r in s.search(

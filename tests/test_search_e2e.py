@@ -67,16 +67,16 @@ def test_term_query_pruned_equals_unpruned(built):
     Stats collection only adds count jobs: the returned plan is the one
     built with it off."""
     idx, _, oracle = built
-    searcher = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
+    searcher = IndexSearcher(idx, prune_engage_min_rows=0)
     q = Q.TermQuery("content", "the")
     plan_off = _plan_text(searcher.search(q, k=5))
-    searcher.collect_prune_stats = True
+    searcher.collect_stats = True
     assert oracle.df("the") > 20  # hot enough that the gate opens
     pruned_df = searcher.search(q, k=5, prune=True)
     assert _plan_text(pruned_df) == plan_off
     pruned = pruned_df.collect()
-    assert searcher.last_prune_stats is not None  # two-phase path ran
-    assert searcher.last_prune_stats["total_blocks"] > 0
+    assert "kept_blocks" in searcher.last_stats  # two-phase path ran
+    assert searcher.last_stats["total_blocks"] > 0
     full = searcher.search(q, k=5, prune=False).collect()
     assert [(r["doc_id"], r["score"]) for r in pruned] == [
         (r["doc_id"], r["score"]) for r in full
@@ -159,11 +159,11 @@ def test_sloppy_general_path_prefilters_in_jvm(built):
     staying faithful to the reference matcher."""
     idx, _, oracle = built
     searcher = IndexSearcher(idx)
-    searcher.collect_prune_stats = True
+    searcher.collect_stats = True
     q = Q.PhraseQuery("content", ("the", "if", "return"), slop=2)
     got = searcher.search(q, k=10).collect()
-    stats = searcher.last_sloppy_stats
-    assert stats is not None
+    stats = searcher.last_stats
+    assert "candidates" in stats
     assert stats["candidates"] < stats["docs_with_all_slots"], stats
     # faithful-matcher oracle over the same corpus
     want = oracle.top_k(oracle.sloppy_scores(["the", "if", "return"], slop=2), 10)
@@ -227,17 +227,16 @@ def test_disjunction_hot_clauses_take_essential_path(built):
     say so, and the result stays bit-identical to the plain disjunction
     and the oracle."""
     idx, _, oracle = built
-    searcher = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
+    searcher = IndexSearcher(idx, prune_engage_min_rows=0)
     q_or = Q.BooleanQuery.of(
         should=[Q.TermQuery("content", "the"), Q.TermQuery("content", "if")]
     )
     plan_off = _plan_text(searcher.search(q_or, k=5))
-    searcher.collect_prune_stats = True
+    searcher.collect_stats = True
     pruned_df = searcher.search(q_or, k=5, prune=True)
     assert _plan_text(pruned_df) == plan_off
     pruned = pruned_df.collect()
-    stats = searcher.last_prune_stats
-    assert stats is not None
+    stats = searcher.last_stats
     assert stats["fell_back"] is False
     assert stats["strategy"] == "maxscore_essential"
     # only the essential clause(s) decode fully; the non-essential side
@@ -254,13 +253,12 @@ def test_disjunction_hot_clauses_take_essential_path(built):
         5,
     )
     # dismax flavor through the same essential machinery
-    searcher.last_prune_stats = None
     q_dm = Q.DisjunctionMaxQuery(
         (Q.TermQuery("content", "the"), Q.TermQuery("content", "if")),
         tie_breaker=0.5,
     )
     pruned_dm = searcher.search(q_dm, k=5, prune=True).collect()
-    assert searcher.last_prune_stats["strategy"] == "maxscore_essential"
+    assert searcher.last_stats["strategy"] == "maxscore_essential"
     full_dm = searcher.search(q_dm, k=5, prune=False).collect()
     assert [(r["doc_id"], r["score"]) for r in pruned_dm] == [
         (r["doc_id"], r["score"]) for r in full_dm
@@ -273,16 +271,15 @@ def test_disjunction_nosplit_falls_back_to_plain(built):
     (``nosplit``), and the query takes the plain one-shuffle plan —
     bit-identical to prune=False and the oracle."""
     idx, _, oracle = built
-    searcher = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
-    searcher.collect_prune_stats = True
+    searcher = IndexSearcher(idx, prune_engage_min_rows=0)
+    searcher.collect_stats = True
     clauses = (Q.TermQuery("content", "lambda"), Q.TermQuery("content", "struct"))
     for q in (
         Q.BooleanQuery.of(should=list(clauses)),
         Q.DisjunctionMaxQuery(clauses, tie_breaker=0.0),
     ):
-        searcher.last_prune_stats = None
         pruned = searcher.search(q, k=10).collect()
-        stats = searcher.last_prune_stats
+        stats = searcher.last_stats
         assert stats["strategy"] == "nosplit", stats
         assert stats["fell_back"] is True
         full = searcher.search(q, k=10, prune=False).collect()
@@ -304,16 +301,15 @@ def test_candidate_cap_overflow_falls_back_to_plain(built, monkeypatch):
     budget below k always overflows (the true top-k are candidates)."""
     idx, _, _ = built
     monkeypatch.setattr(IndexSearcher, "MAX_CANDIDATES", 3)
-    searcher = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
-    searcher.collect_prune_stats = True
+    searcher = IndexSearcher(idx, prune_engage_min_rows=0)
+    searcher.collect_stats = True
     clauses = (Q.TermQuery("content", "the"), Q.TermQuery("content", "if"))
     for q in (
         Q.BooleanQuery.of(should=list(clauses)),
         Q.DisjunctionMaxQuery(clauses, tie_breaker=0.4),
     ):
-        searcher.last_prune_stats = None
         pruned = searcher.search(q, k=10).collect()
-        stats = searcher.last_prune_stats
+        stats = searcher.last_stats
         assert stats["strategy"] == "cap", stats
         assert stats["fell_back"] is True
         assert stats["n_candidates"] > 3
@@ -333,17 +329,21 @@ def test_search_many_empty_batch(built):
 
 
 def test_preloaded_block_meta_identical_and_used(built):
-    """Serving layout part 2 (preload_block_meta): with per-hot-term block
-    metadata in driver memory, the pruned paths must (a) actually use it
-    (stats record preloaded=True) and (b) stay bit-identical to
-    prune=False across term/OR/dismax shapes — anchors and max bounds are
-    weight-independent, and the driver-side frontier max reproduces the
-    JVM block-bound float32 op order exactly."""
-    idx, searcher, _ = built
-    pre = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
+    """Serving layout part 2: the pruned paths read their block metadata
+    from the one memoized loader (_block_meta_for). Warmed eagerly by
+    preload_block_meta() or filled lazily by the first pruned query, every
+    clause term ends up in the memo, with the same entries, and both
+    searchers stay bit-identical to prune=False across term/OR/dismax
+    shapes — anchors and max bounds are weight-independent, and the
+    driver-side frontier max reproduces the JVM block-bound float32 op
+    order exactly."""
+    idx, searcher, oracle = built
+    pre = IndexSearcher(idx, prune_engage_min_rows=0)
     pre.preload_stats()
     assert pre.preload_block_meta() > 0
-    pre.collect_prune_stats = True
+    lazy = IndexSearcher(idx, prune_engage_min_rows=0)
+    assert not lazy._block_meta
+    assert oracle.df("the") > 4 * 10  # the term shape clears the 4k floor
     shapes = [
         Q.TermQuery("content", "the"),
         Q.BooleanQuery.of(
@@ -358,13 +358,17 @@ def test_preloaded_block_meta_identical_and_used(built):
         ),
     ]
     for q in shapes:
-        got = [(int(r["doc_id"]), float(r["score"]))
-               for r in pre.search(q, k=10).collect()]
         want = [(int(r["doc_id"]), float(r["score"]))
                 for r in searcher.search(q, k=10, prune=False).collect()]
-        assert got == want, type(q).__name__
-        if not isinstance(q, Q.TermQuery):
-            assert pre.last_prune_stats.get("preloaded") is True
+        for s in (pre, lazy):
+            got = [(int(r["doc_id"]), float(r["score"]))
+                   for r in s.search(q, k=10).collect()]
+            assert got == want, type(q).__name__
+        terms: set = set()
+        lazy._collect_terms(q, terms)
+        for key in terms:
+            assert key in pre._block_meta and key in lazy._block_meta, key
+            assert lazy._block_meta[key]["anchors"] == pre._block_meta[key]["anchors"]
 
 
 def test_preloaded_maxub_matches_jvm_block_bound(built):
@@ -374,14 +378,15 @@ def test_preloaded_maxub_matches_jvm_block_bound(built):
     from pyspark.sql import functions as F
 
     idx, searcher, _ = built
-    pre = IndexSearcher(idx, prune_min_df=1, prune_engage_min_rows=0)
+    pre = IndexSearcher(idx, prune_engage_min_rows=0)
     pre.preload_stats()
     pre.preload_block_meta()
     fs = idx.fieldstats["content"]
     for term in ("the", "if", "return", "index"):
         df, _ = pre._stats_memo[("content", term)]
         w = pre.sim.weight(1.0, pre.sim.idf(df, fs.doc_count))
-        got = pre._preloaded_maxub("content", term, float(w))
+        meta = pre._block_meta[("content", term)]
+        got = pre._term_max_bound("content", meta, float(w))
         jvm = (
             pre._blocks("content", F.col("term") == term)
             .select(pre._block_ub("content", w).alias("ub"))
@@ -595,8 +600,8 @@ def test_engagement_gate_skips_small_corpora(built):
     strategy says the gate (not a mid-ladder guard) made the call. With
     the gate lowered the same searcher engages the ladder."""
     idx, _, oracle = built
-    gated = IndexSearcher(idx, prune_min_df=1)  # default engage gate: 1<<20 rows
-    gated.collect_prune_stats = True
+    gated = IndexSearcher(idx)  # default engage gate: 1<<20 rows
+    gated.collect_stats = True
     q_term = Q.TermQuery("content", "the")
     q_or = Q.BooleanQuery.of(
         should=[Q.TermQuery("content", "the"), Q.TermQuery("content", "if")]
@@ -605,14 +610,50 @@ def test_engagement_gate_skips_small_corpora(built):
         (q_term, oracle.term_scores("the")),
         (q_or, oracle.or_scores(["the", "if"])),
     ):
-        gated.last_prune_stats = None
         res = gated.search(q, k=5)
         _assert_topk_identical(res, oracle.top_k(scores, 5), 5)
-        stats = gated.last_prune_stats
-        assert stats is not None and stats["strategy"] == "engage_gate"
+        stats = gated.last_stats
+        assert stats["strategy"] == "engage_gate"
         assert stats["fell_back"] is True
         assert stats["est_demotable_rows"] < stats["gate_rows"]
         assert stats["phase1_blocks"] == 0  # zero-job decision: nothing decoded
+
+
+def test_stats_record_resets_per_search(built):
+    """One stats record: search() and search_many() start a fresh
+    last_stats, so a second call never carries the first query's keys."""
+    idx, _, _ = built
+    s = IndexSearcher(idx, prune_engage_min_rows=0)
+    s.collect_stats = True
+    q_or = Q.BooleanQuery.of(
+        should=[Q.TermQuery("content", "the"), Q.TermQuery("content", "if")]
+    )
+    s.search(q_or, k=5)
+    assert s.last_stats["strategy"] == "maxscore_essential"
+    s.search(Q.PhraseQuery("content", ("the", "if", "return"), slop=2), k=10)
+    assert set(s.last_stats) == {"docs_with_all_slots", "candidates"}
+    s.search_many({"q": Q.TermQuery("content", "the")}, k=5)
+    assert s.last_stats == {}
+
+
+def test_serving_layout_rebinds_termstats(built):
+    """optimize_for_serving unpersists the build's postings, so it must
+    re-derive termstats from the compacted blocks: the stats plan no
+    longer runs the Python pack stage, and the rows are unchanged."""
+    from dataclasses import replace
+
+    idx, _, _ = built
+    cols = ["field", "term", "df", "ttf"]
+    before = sorted(tuple(r) for r in idx.termstats.select(*cols).collect())
+    served = replace(idx)  # shares the fixture's persisted postings
+    try:
+        IndexSearcher(served).optimize_for_serving()
+        plan = served.termstats._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" not in plan and "MapInArrow" not in plan, plan
+        after = sorted(tuple(r) for r in served.termstats.select(*cols).collect())
+        assert after == before
+    finally:
+        idx.postings.persist()  # optimize_for_serving unpersisted it
 
 
 def test_search_many_batches_span_and_parser_plans(built):

@@ -351,7 +351,7 @@ def test_phrase_sums_per_term_subscores(spark, small_index):
 
 def test_pruned_gate_falls_back_and_agrees(spark, small_index):
     sim = SB.LMDirichletSimilarity()
-    s = IndexSearcher(small_index, similarity=sim, prune_min_df=1, prune_engage_min_rows=0)
+    s = IndexSearcher(small_index, similarity=sim, prune_engage_min_rows=0)
     q = Q.TermQuery("text", "table")
     pruned = [(r["doc_id"], r["score"]) for r in s.search(q, k=3, prune=True).collect()]
     plain = [(r["doc_id"], r["score"]) for r in s.search(q, k=3, prune=False).collect()]
