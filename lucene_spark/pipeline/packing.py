@@ -28,9 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-__all__ = ["pack_sequences"]
+from lucene_spark.pipeline.dedup import TOKEN_RE
 
-TOKEN_RE = "[a-z0-9_]+"
+__all__ = ["pack_sequences"]
 
 
 def pack_sequences(

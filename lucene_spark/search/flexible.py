@@ -5,10 +5,13 @@ pipeline it defines:
 
 1. **StandardSyntaxParser** (``standard/parser/StandardSyntaxParser.jj``):
    pure syntax -> QueryNode tree. No analysis, no config — exactly the
-   reference's split. Grammar = classic parser syntax plus the flexible
-   additions: min-should-match groups ``(blue crab fish)@2``, interval
-   functions ``fn:ordered(quick brown fox)`` (nestable, field-prefixable),
-   regexp ``/re/``, ``*:*`` match-all.
+   reference's split. It is the repo's one query-syntax grammar: the
+   classic ``QueryParser`` parses with it too (``queryparser.py``). It
+   reads the classic syntax plus the flexible additions: min-should-match
+   groups ``(blue crab fish)@2``, interval functions
+   ``fn:ordered(quick brown fox)`` (nestable, field-prefixable), regexp
+   ``/re/``, ``*:*`` match-all, and ``field:key:value`` extension calls
+   (``ExtensionQueryNode``; only the classic configuration builds them).
 2. **Processor pipeline**
    (``standard/processors/StandardQueryNodeProcessorPipeline.java:48-69``):
    an ordered, user-editable LIST of tree transforms — the extension hook
@@ -37,7 +40,6 @@ from dataclasses import dataclass, field as dc_field, replace
 from lucene_spark.analysis.tokenizer import StandardAnalyzer
 from lucene_spark.search import intervals as IV
 from lucene_spark.search import query as Q
-from lucene_spark.search.queryparser import QueryParseError
 
 __all__ = [
     "StandardQueryParser",
@@ -45,6 +47,10 @@ __all__ = [
     "StandardSyntaxParser",
     "QueryParseError",
 ]
+
+
+class QueryParseError(ValueError):
+    pass
 
 
 # ---------------------------------------------------------------- nodes
@@ -141,6 +147,17 @@ class IntervalFnQueryNode(QueryNode):
     name: str
     args: tuple  # str | int | float | IntervalFnQueryNode | ("quoted", str)
     source: object | None = None  # IV.IntervalsSource after processing
+
+
+@dataclass(frozen=True)
+class ExtensionQueryNode(QueryNode):
+    """``field:key:value``: the ExtendableQueryParser call syntax
+    (``queryparser/ext/ExtendableQueryParser.java``); ``text`` is the raw
+    value (a quoted value's body), never analyzed."""
+
+    field: str
+    key: str
+    text: str
 
 
 @dataclass(frozen=True)
@@ -313,14 +330,17 @@ class StandardSyntaxParser:
 
     def _clause(self, toks):
         field = None
-        t = toks[0]
-        if t.kind == "term" and len(toks) >= 2 and toks[1].kind == "colon":
-            field = t.text
-            toks = toks[2:]
+        if toks[0].kind == "term" and len(toks) >= 2 and toks[1].kind == "colon":
+            field, toks = toks[0].text, toks[2:]
             if not toks:
                 raise QueryParseError(f"dangling field '{field}:'")
-            t = toks[0]
-        if t.kind == "fn":
+        t = toks[0]
+        if (field and t.kind == "term" and len(toks) >= 3
+                and toks[1].kind == "colon" and toks[2].kind in ("term", "quoted")):
+            v = toks[2]
+            raw = v.m.group("qbody") if v.kind == "quoted" else v.text
+            node, toks = ExtensionQueryNode(field, t.text, raw), toks[3:]
+        elif t.kind == "fn":
             args, toks = self._fn_args(toks[1:])
             node = IntervalFnQueryNode(field, t.m.group("fname"), args)
         elif t.kind == "lparen":
@@ -456,7 +476,14 @@ class WildcardQueryNodeProcessor:
 class MultiFieldQueryNodeProcessor:
     """Unfielded leaves expand over config.multi_fields into a SHOULD
     group (MultiFieldQueryNodeProcessor.java); otherwise the default
-    field applies."""
+    field applies.
+
+    ``boost_copies`` is set by the classic ``MultiFieldQueryParser``:
+    config.field_boosts then go on the expanded copies only, and
+    explicitly fielded clauses stay unboosted
+    (classic/MultiFieldQueryParser.java:83-104). The standard parser
+    leaves it off and boosts every node of a boosted field in
+    BoostQueryNodeProcessor."""
 
     _LEAves = (
         FieldQueryNode, QuotedFieldQueryNode, FuzzyQueryNode,
@@ -464,14 +491,22 @@ class MultiFieldQueryNodeProcessor:
         TermRangeQueryNode, IntervalFnQueryNode,
     )
 
+    def __init__(self, boost_copies: bool = False):
+        self.boost_copies = boost_copies
+
     def process(self, node, config):
         fields = config.multi_fields
+        boosts = config.field_boosts if self.boost_copies else {}
+
+        def copy(n, f):
+            n = replace(n, field=f)
+            return BoostQueryNode(n, float(boosts[f])) if boosts.get(f) else n
 
         def fn(n):
             if isinstance(n, self._LEAves) and n.field is None:
                 if not fields:
                     return replace(n, field=config.default_field)
-                per = tuple(replace(n, field=f) for f in fields)
+                per = tuple(copy(n, f) for f in fields)
                 if len(per) == 1:
                     return per[0]
                 return BooleanQueryNode(
@@ -658,10 +693,16 @@ class BooleanQuery2ModifierNodeProcessor:
 class RemoveEmptyNonLeafQueryNodeProcessor:
     """Drop MatchNoDocs children from booleans; collapse empty booleans
     (RemoveEmptyNonLeafQueryNodeProcessor.java +
-    BooleanSingleChildOptimizationQueryNodeProcessor.java)."""
+    BooleanSingleChildOptimizationQueryNodeProcessor.java). A boosted
+    MatchNoDocs is empty too, as the reference's handleBoost keeps a null
+    query null."""
 
     def process(self, node, config):
         def fn(n):
+            if isinstance(n, BoostQueryNode) and isinstance(
+                n.child, MatchNoDocsQueryNode
+            ):
+                return n.child
             if isinstance(n, ResolvedBooleanQueryNode):
                 kept = tuple(
                     c for c in n.children

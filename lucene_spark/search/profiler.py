@@ -97,13 +97,13 @@ def profile(searcher, q: Q.Query, scored: bool = True) -> ProfileNode:
     """
     t0 = time.perf_counter()
     try:
-        plan = searcher.scored(q) if scored else searcher._matches(q)
+        plan = searcher.scored(q) if scored else searcher.matches(q)
     except NotImplementedError:
         # nodes without a scored form (pure filters) fall back to matching;
         # anything else (AttributeError/ValueError from a genuine scoring
         # bug or bad field) must propagate, not be silently reprofiled as
         # a filter
-        plan = searcher._matches(q)
+        plan = searcher.matches(q)
     create_ms = (time.perf_counter() - t0) * 1000.0
 
     t1 = time.perf_counter()

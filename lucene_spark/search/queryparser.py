@@ -1,88 +1,73 @@
-"""Classic query-string parser → Query AST.
+"""Classic query-string parser → Query AST (``queryparser/classic/
+QueryParser.jj``, ``QueryParserBase.java``, ``MultiFieldQueryParser.java``).
 
-Implements the classic-parser grammar subset that matters
-(``queryparser/classic/QueryParser.jj:196-224``):
+The classic parser is a configuration of the flexible pipeline
+(:mod:`lucene_spark.search.flexible`), so one lexer, one grammar, one
+occur resolution and one multi-field expansion serve both. The syntax
+(``QueryParser.jj:196-224``) is the shared ``StandardSyntaxParser``:
 
-- occurs: ``+term`` (MUST), ``-term``/``!term`` (MUST_NOT)
-- operators: ``AND``/``&&``, ``OR``/``||``, ``NOT`` (default operator OR,
+- occurs: ``+term`` (MUST), ``-term``/``!term``/``NOT term`` (MUST_NOT)
+- operators: ``AND``/``&&``, ``OR``/``||`` (default operator OR,
   QueryParser.jj:109)
-- ``field:term`` (COLON :204), boost ``^2.5`` (CARAT :206)
-- quoted phrases ``"a b"`` with slop ``"a b"~2`` (QUOTED :207, FUZZY_SLOP :209)
-- fuzzy ``term~`` / ``term~1`` ; prefix ``ter*`` ; wildcard ``t?r*`` (:210-211)
-- regexp ``/re/`` (:212); ranges ``[a TO b]`` / ``{a TO b}`` (:213-224)
-- grouping ``( ... )``
+- ``field:term`` and ``field:( ... )`` (COLON :204), boost ``^2.5``
+- quoted phrases ``"a b"`` with slop ``"a b"~2``
+- fuzzy ``term~`` / ``term~1``; prefix ``ter*``; wildcard ``t?r*``
+- regexp ``/re/``; ranges ``[a TO b]`` / ``{a TO b}``; ``*:*``
 
-Query text is analyzed with the SAME analyzer as indexing
+What the classic configuration sets:
+
+- processors: ``DEFAULT_PROCESSORS`` without the interval and field-boost
+  processors. Two classic hooks join them. The first step rejects the
+  flexible-only syntax (``(...)@N``, ``fn:name(...)``), which the classic
+  grammar lacks, and routes the ``extensions`` registry. Just before
+  analysis, quoted text goes to the overridable ``_field_query``;
+- ``MultiFieldQueryParser`` boosts only the copies an unfielded clause
+  expands into (MultiFieldQueryParser.getFieldQuery);
+- builders: the flexible builder map, plus one entry for hook-built leaves.
+
+Text is analyzed with the SAME analyzer as indexing
 (``QueryParserBase.java:439-446`` newFieldQuery): a bare token that
-analyzes to multiple terms becomes a phrase-less OR; quoted text becomes a
+analyzes to several terms becomes an OR; quoted text becomes a
 PhraseQuery over the analyzed terms.
+
+The shared pipeline fixes four places where a separate classic grammar
+departed from the reference:
+
+- ``title:(a b)`` puts both terms on ``title`` (QueryParser.jj Clause);
+- ``*:*`` is MatchAllDocsQuery (QueryParserBase.getWildcardQuery);
+- a clause the analyzer empties is dropped, so ``a AND ...`` is ``+a``
+  (QueryParserBase.addClause);
+- a leading wildcard (``*``, ``*ing``) raises: allowLeadingWildcard
+  defaults to false.
 """
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 
 from lucene_spark.analysis.tokenizer import StandardAnalyzer
+from lucene_spark.search import flexible as FX
 from lucene_spark.search import query as Q
+from lucene_spark.search.flexible import QueryParseError
 
 __all__ = ["QueryParser", "QueryParseError"]
 
 
-class QueryParseError(ValueError):
-    pass
+@dataclass(frozen=True)
+class _BuiltQueryNode(FX.QueryNode):
+    """A leaf a classic hook already built into a ``Q.*`` query."""
+
+    query: Q.Query
 
 
-_TOKEN = re.compile(
-    r"""
-    (?P<ws>\s+)
-  | (?P<lparen>\()
-  | (?P<rparen>\))
-  | (?P<and>AND\b|&&)
-  | (?P<or>OR\b|\|\|)
-  | (?P<not>NOT\b)
-  | (?P<plus>\+)
-  | (?P<minus>-)
-  | (?P<bang>!)
-  | (?P<quoted>"(?P<qbody>[^"]*)"(?:~(?P<qslop>\d+))?)
-  | (?P<regex>/(?P<rbody>[^/]+)/)
-  | (?P<range>(?P<rlo_b>[\[{])\s*(?P<rlo>[^\s\]}]+)\s+TO\s+(?P<rhi>[^\s\]}]+)\s*(?P<rhi_b>[\]}]))
-  | (?P<term>[^\s()+\-!^~:"][^\s()^~:"]*)
-  | (?P<colon>:)
-  | (?P<carat>\^(?P<boostv>[0-9]+(?:\.[0-9]+)?))
-  | (?P<tilde>~(?P<fuzzn>[0-9]*))
-    """,
-    re.VERBOSE,
-)
+class _Hook:
+    """A processor that applies ``fn(node, config)`` over the tree."""
 
+    def __init__(self, fn):
+        self.fn = fn
 
-@dataclass
-class _Tok:
-    kind: str
-    text: str
-    m: re.Match
-
-
-def _lex(s: str) -> list[_Tok]:
-    out, i = [], 0
-    while i < len(s):
-        m = _TOKEN.match(s, i)
-        if not m:
-            raise QueryParseError(f"cannot lex at {i}: {s[i:i+20]!r}")
-        i = m.end()
-        kind = m.lastgroup
-        if kind == "ws":
-            continue
-        # lastgroup reports the LAST matched group; normalize to the outer one
-        for outer in (
-            "lparen", "rparen", "and", "or", "not", "plus", "minus", "bang",
-            "quoted", "regex", "range", "term", "colon", "carat", "tilde",
-        ):
-            if m.group(outer) is not None:
-                kind = outer
-                break
-        out.append(_Tok(kind, m.group(0), m))
-    return out
+    def process(self, node, config):
+        return FX._map(node, lambda n: self.fn(n, config))
 
 
 class QueryParser:
@@ -105,73 +90,46 @@ class QueryParser:
         #: plain-colon spelling here, registered keys take precedence
         #: over same-named fields, documented divergence).
         self.extensions = dict(extensions or {})
+        procs = [_Hook(self._classic_syntax)]
+        for cls in FX.DEFAULT_PROCESSORS:
+            if cls in (FX.IntervalQueryNodeProcessor, FX.BoostQueryNodeProcessor):
+                continue
+            if cls is FX.AnalyzerQueryNodeProcessor:
+                procs.append(_Hook(self._quoted_text))
+            multi = cls is FX.MultiFieldQueryNodeProcessor
+            procs.append(cls(boost_copies=True) if multi else cls())
+        self._flexible = FX.StandardQueryParser(self.analyzer)
+        self._flexible.processors = procs
+        self._flexible.builders[_BuiltQueryNode] = lambda n, b, c: n.query
 
-    # grammar: expr := clause ((AND|OR)? clause)* with +/-/NOT prefixes
     def parse(self, text: str) -> Q.Query:
-        toks = _lex(text)
-        q, rest = self._parse_expr(toks)
-        if rest:
-            raise QueryParseError(f"trailing input: {[t.text for t in rest]}")
-        return q
+        cfg = self._flexible.config
+        cfg.analyzer, cfg.default_operator = self.analyzer, self.default_operator
+        return self._flexible.parse(text, self.field)
 
-    def _parse_expr(self, toks: list[_Tok]):
-        items: list[tuple[str | None, Q.Query]] = []  # (occur_override, query)
-        conj: list[str] = []  # operator BEFORE item i (for i>=1)
-        pending_op = None
-        while toks:
-            t = toks[0]
-            if t.kind == "rparen":
-                break
-            if t.kind in ("and", "or"):
-                pending_op = "AND" if t.kind == "and" else "OR"
-                toks = toks[1:]
-                continue
-            occur = None
-            if t.kind == "plus":
-                occur, toks = "MUST", toks[1:]
-            elif t.kind in ("minus", "bang"):
-                occur, toks = "MUST_NOT", toks[1:]
-            elif t.kind == "not":
-                occur, toks = "MUST_NOT", toks[1:]
-            if not toks:
-                raise QueryParseError("dangling operator")
-            node, toks = self._parse_clause(toks)
-            if items:
-                conj.append(pending_op or self.default_operator)
-            pending_op = None
-            items.append((occur, node))
-        if not items:
-            raise QueryParseError("empty query")
-        if len(items) == 1 and items[0][0] is None:
-            return items[0][1], toks
-        # occur resolution (classic parser semantics): AND promotes both
-        # sides to MUST; explicit +/- wins; otherwise default-op SHOULD
-        occurs: list[str] = []
-        for i, (ov, _) in enumerate(items):
-            if ov is not None:
-                occurs.append(ov)
-                continue
-            left_and = i > 0 and conj[i - 1] == "AND"
-            right_and = i < len(conj) and conj[i] == "AND"
-            occurs.append("MUST" if (left_and or right_and) else "SHOULD")
-        must = tuple(q for o, (_, q) in zip(occurs, items) if o == "MUST")
-        should = tuple(q for o, (_, q) in zip(occurs, items) if o == "SHOULD")
-        must_not = tuple(q for o, (_, q) in zip(occurs, items) if o == "MUST_NOT")
-        return (
-            Q.BooleanQuery.of(must=must, should=should, must_not=must_not),
-            toks,
-        )
+    def _classic_syntax(self, n, config):
+        if isinstance(n, (FX.MinShouldMatchNode, FX.IntervalFnQueryNode)):
+            raise QueryParseError(
+                f"{type(n).__name__} is flexible-only syntax "
+                "(use flexible.StandardQueryParser)"
+            )
+        ext = self.extensions
+        if isinstance(n, FX.ExtensionQueryNode):
+            if n.key not in ext:
+                raise QueryParseError(f"no extension registered for {n.key!r}")
+            return _BuiltQueryNode(ext[n.key](n.field, n.text))
+        if isinstance(n, (FX.FieldQueryNode, FX.QuotedFieldQueryNode)) \
+                and n.field in ext:
+            return _BuiltQueryNode(ext[n.field](config.default_field, n.text))
+        return n
 
-    def _ext_clause(self, field: str, key: str, toks: list):
-        """Consume the value token, invoke the extension, honor ^boost."""
-        t = toks[0]
-        raw = t.m.group("qbody") if t.kind == "quoted" else t.text
-        node = self.extensions[key](field, raw)
-        toks = toks[1:]
-        if toks and toks[0].kind == "carat":
-            node = Q.BoostQuery(node, float(toks[0].m.group("boostv")))
-            toks = toks[1:]
-        return node, toks
+    def _quoted_text(self, n, config):
+        if not isinstance(n, FX.QuotedFieldQueryNode):
+            return n
+        q = self._field_query(n.field, n.text, n.slop)
+        if isinstance(q, Q.MatchNoDocsQuery):
+            return FX.MatchNoDocsQueryNode()
+        return _BuiltQueryNode(q)
 
     def _field_query(self, field: str, body: str, slop: int) -> Q.Query:
         """Quoted-text factory (the reference's overridable
@@ -185,133 +143,22 @@ class QueryParser:
             return Q.TermQuery(field, terms[0])
         return Q.PhraseQuery(field, terms, slop=slop)
 
-    def _parse_clause(self, toks: list[_Tok]):
-        field = self.field
-        t = toks[0]
-        # field: prefix
-        if (
-            t.kind == "term"
-            and len(toks) >= 2
-            and toks[1].kind == "colon"
-        ):
-            field = t.text
-            toks = toks[2:]
-            if not toks:
-                raise QueryParseError(f"dangling field '{field}:'")
-            # ext hook (queryparser/ext/ExtendableQueryParser.java):
-            # key:value with a registered key -> extension on the default
-            # field; field:key:value -> extension on the named field
-            if field in self.extensions and toks[0].kind in ("term", "quoted"):
-                return self._ext_clause(self.field, field, toks)
-            if (
-                len(toks) >= 3
-                and toks[0].kind == "term"
-                and toks[0].text in self.extensions
-                and toks[1].kind == "colon"
-                and toks[2].kind in ("term", "quoted")
-            ):
-                return self._ext_clause(field, toks[0].text, toks[2:])
-            t = toks[0]
-        if t.kind == "lparen":
-            inner, rest = self._parse_expr(toks[1:])
-            if not rest or rest[0].kind != "rparen":
-                raise QueryParseError("unbalanced parenthesis")
-            node, toks = inner, rest[1:]
-        elif t.kind == "quoted":
-            body = t.m.group("qbody")
-            slop = int(t.m.group("qslop") or 0)
-            node = self._field_query(field, body, slop)
-            toks = toks[1:]
-        elif t.kind == "regex":
-            node, toks = Q.RegexpQuery(field, t.m.group("rbody")), toks[1:]
-        elif t.kind == "range":
-            lo, hi = t.m.group("rlo"), t.m.group("rhi")
-            node = Q.TermRangeQuery(
-                field,
-                None if lo == "*" else lo,
-                None if hi == "*" else hi,
-                include_lower=t.m.group("rlo_b") == "[",
-                include_upper=t.m.group("rhi_b") == "]",
-            )
-            toks = toks[1:]
-        elif t.kind == "term":
-            raw = t.text
-            toks = toks[1:]
-            if toks and toks[0].kind == "tilde":
-                n = toks[0].m.group("fuzzn")
-                node = Q.FuzzyQuery(field, raw.lower(), max_edits=int(n) if n else 2)
-                toks = toks[1:]
-            elif "*" in raw or "?" in raw:
-                low = raw.lower()
-                if low.endswith("*") and "*" not in low[:-1] and "?" not in low:
-                    node = Q.PrefixQuery(field, low[:-1])
-                else:
-                    node = Q.WildcardQuery(field, low)
-            else:
-                terms = self.analyzer.terms(raw)
-                if not terms:
-                    node = Q.MatchNoDocsQuery()
-                elif len(terms) == 1:
-                    node = Q.TermQuery(field, terms[0])
-                else:  # analysis split one bare token into several terms
-                    node = Q.BooleanQuery.of(
-                        should=tuple(Q.TermQuery(field, x) for x in terms)
-                    )
-        else:
-            raise QueryParseError(f"unexpected token {t.text!r}")
-        # boost suffix
-        if toks and toks[0].kind == "carat":
-            boost = float(toks[0].m.group("boostv"))
-            node = Q.BoostQuery(node, boost)
-            toks = toks[1:]
-        return node, toks
-
 
 class MultiFieldQueryParser(QueryParser):
     """classic/MultiFieldQueryParser.java:33 — clauses with no explicit
     ``field:`` prefix expand into a SHOULD-boolean over every configured
     field (per-field boosts applied as BoostQuery, :83-104); explicitly
-    fielded clauses stay single-field. The expansion applies to every
-    leaf type (term/prefix/wildcard/fuzzy/range/phrase), exactly the set
-    of getXQuery overrides the reference carries."""
-
-    _SENTINEL = "\x00__multi_field__"
+    fielded clauses stay single-field and unboosted. The expansion applies
+    to every leaf type (term/prefix/wildcard/fuzzy/range/phrase), exactly
+    the set of getXQuery overrides the reference carries."""
 
     def __init__(self, fields, analyzer=None, boosts=None,
                  default_operator: str = "OR"):
-        super().__init__(self._SENTINEL, analyzer, default_operator)
+        super().__init__(None, analyzer, default_operator)
         self.fields = tuple(fields)
         self.boosts = dict(boosts or {})
 
-    def _expand(self, q: Q.Query) -> Q.Query:
-        import dataclasses
-
-        if isinstance(q, Q.BooleanQuery):
-            return Q.BooleanQuery(
-                tuple(
-                    Q.BooleanClause(self._expand(c.query), c.occur)
-                    for c in q.clauses
-                ),
-                q.minimum_should_match,
-            )
-        if isinstance(q, (Q.BoostQuery, Q.ConstantScoreQuery)):
-            return dataclasses.replace(q, query=self._expand(q.query))
-        if isinstance(q, Q.DisjunctionMaxQuery):
-            return dataclasses.replace(
-                q, queries=tuple(self._expand(s) for s in q.queries)
-            )
-        if getattr(q, "field", None) == self._SENTINEL:
-            per_field = []
-            for f in self.fields:
-                import dataclasses as _dc
-
-                sub = _dc.replace(q, field=f)
-                b = self.boosts.get(f)
-                per_field.append(Q.BoostQuery(sub, float(b)) if b else sub)
-            if len(per_field) == 1:
-                return per_field[0]
-            return Q.BooleanQuery.of(should=per_field)
-        return q
-
     def parse(self, text: str) -> Q.Query:
-        return self._expand(super().parse(text))
+        cfg = self._flexible.config
+        cfg.multi_fields, cfg.field_boosts = self.fields, self.boosts
+        return super().parse(text)

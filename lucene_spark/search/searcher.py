@@ -13,8 +13,9 @@ Execution-model parity with the reference (``search/IndexSearcher.java``):
 - top-k = ``ORDER BY score DESC, doc_id ASC LIMIT k`` (Spark TakeOrdered =
   per-partition heaps + merge; tie-break per ``TopScoreDocCollector.java:26``
   and ``TopDocs.java:75-119``);
-- single-term top-k applies block-max pruning: per-block upper bounds from
-  ``(max_freq, min_norm)`` impacts, a first pass over the highest-impact
+- single-term top-k applies block-max pruning: a block's upper bound is
+  the best score over its competitive ``(freq, norm)`` impact pairs (the
+  Pareto frontier stored per block), a first pass over the highest-impact
   blocks establishes the running k-th score, remaining blocks with
   ``upper_bound < theta`` are never decoded (WAND family:
   ``search/WANDScorer.java:32-55``, ``MaxScoreCache.java:59-140``);
@@ -179,7 +180,7 @@ class IndexSearcher:
         prune_engage_min_rows: int | None = None,
     ):
         """``similarity`` is any object with the Similarity surface
-        (idf/avgdl/norm_inv_cache/weight/score/score_max/score_col):
+        (idf/avgdl/norm_inv_cache/weight/score/score_col):
         :class:`BM25Similarity` (default), :class:`ClassicSimilarity`
         (TF-IDF), :class:`BooleanSimilarity` — the reference's pluggable
         ``IndexSearcher.setSimilarity`` extension point.
@@ -288,18 +289,15 @@ class IndexSearcher:
             )
         return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
-    def optimize_for_serving(
-        self, partitions: int | None = None, cache_positions: bool = False
-    ) -> None:
+    def optimize_for_serving(self, cache_positions: bool = False) -> None:
         """Re-layout the index for query serving: coalesce the postings
-        cache to ~core-count partitions (every query scans the cache, so
+        cache to the default parallelism (every query scans the cache, so
         hundreds of build-time shuffle partitions mean hundreds of tasks
         per search) and preload the term dictionary stats.
         ``cache_positions=True`` additionally materializes the decoded
         serving frame (see :meth:`cache_decoded_positions`), which every
         query family then filters instead of decoding blocks."""
-        spark = self.index.docs.sparkSession
-        p = partitions or spark.sparkContext.defaultParallelism
+        p = self.index.docs.sparkSession.sparkContext.defaultParallelism
         old = self.index.postings
         # localCheckpoint (eager) instead of a plain persist: it TRUNCATES
         # the logical plan at the materialized blocks, so every query job
@@ -351,13 +349,14 @@ class IndexSearcher:
             self._decoded_cache[fname] = d.localCheckpoint(eager=True)
         return ok
 
-    def preload_stats(self, max_terms: int = 1 << 20) -> bool:
+    def preload_stats(self) -> bool:
         """Pull the whole term dictionary's (df, ttf) into the driver memo
         when it fits — per-query stat resolution then costs zero jobs (the
         term-dictionary-in-RAM position Lucene's FST occupies). Returns
-        False (and loads nothing) when the vocabulary exceeds max_terms."""
+        False (and loads nothing) when the vocabulary exceeds
+        STATS_MAX_TERMS."""
         n = self.index.termstats.count()
-        if n > max_terms:
+        if n > self.STATS_MAX_TERMS:
             return False
         for r in self.index.termstats.collect():
             self._stats_memo[(r["field"], r["term"])] = (int(r["df"]), int(r["ttf"]))
@@ -366,6 +365,9 @@ class IndexSearcher:
 
     #: anchor blocks kept per term by _block_meta_for
     N_ANCHORS = 16
+
+    #: vocabulary budget of preload_stats (one driver memo entry per term)
+    STATS_MAX_TERMS = 1 << 20
 
     #: budget of the block-metadata memo (~1 KB per term); past it a
     #: pruned query still loads its terms' metadata but does not keep it

@@ -295,12 +295,6 @@ class _SimilarityBase:
             acc = s if acc is None else acc + s
         return acc.cast("float")
 
-    def score_max(self, max_freq, min_len_norm_byte, avgdl, weight) -> np.float32:
-        dl = float(LENGTH_TABLE[int(min_len_norm_byte)])
-        return self.score(
-            np.array([float(max_freq)]), np.array([dl]), weight
-        )[0]
-
 
 # ----------------------------------------------------------- language models
 

@@ -93,22 +93,6 @@ class BM25Similarity:
         one = F32(1.0)
         return (weight - weight / (one + freq * norm_inv)).astype(np.float32)
 
-    def score_max(
-        self, max_freq: int, min_len_norm_byte: int, avgdl: np.float32, weight: np.float32
-    ) -> np.float32:
-        """Block upper bound: score at (max block freq, min block length).
-
-        Valid because BM25 is monotone increasing in freq and decreasing in
-        field length (reference impact machinery:
-        ``search/MaxScoreCache.java:59-140``).
-        """
-        cache = self.norm_inv_cache(avgdl)
-        return self.score(
-            np.array([max_freq], dtype=np.float32),
-            cache[np.array([min_len_norm_byte])],
-            weight,
-        )[0]
-
     def score_col(self, freq_col, inv_col, w_col):
         """Spark Column twin of :meth:`score` — ``w - w/(1 + freq*inv)``,
         all FloatType so the plan stays whole-stage codegen. Spark's Divide
@@ -168,16 +152,6 @@ class ClassicSimilarity:
         tf = np.sqrt(freq.astype(np.float64)).astype(np.float32)
         raw = (tf * weight).astype(np.float32)
         return (raw * np.asarray(norm_inv, dtype=np.float32)).astype(np.float32)
-
-    def score_max(
-        self, max_freq: int, min_len_norm_byte: int, avgdl: np.float32, weight: np.float32
-    ) -> np.float32:
-        cache = self.norm_inv_cache(avgdl)
-        return self.score(
-            np.array([max_freq], dtype=np.float32),
-            cache[np.array([min_len_norm_byte])],
-            weight,
-        )[0]
 
     def score_col(self, freq_col, inv_col, w_col):
         """``float(float(sqrt(freq)) * w) * normTable[norm]`` — sqrt runs in
@@ -274,11 +248,6 @@ class BooleanSimilarity:
         self, freq: np.ndarray, norm_inv: np.ndarray, weight: np.float32
     ) -> np.ndarray:
         return np.full(np.asarray(freq).shape, weight, dtype=np.float32)
-
-    def score_max(
-        self, max_freq: int, min_len_norm_byte: int, avgdl: np.float32, weight: np.float32
-    ) -> np.float32:
-        return F32(weight)
 
     def score_col(self, freq_col, inv_col, w_col):
         return w_col

@@ -117,8 +117,8 @@ def main() -> None:
 
     plain = IndexSearcher(idx)
     plain.optimize_for_serving()
+    # same index: plain already compacted it, so pruned only warms its memos
     pruned = IndexSearcher(idx, prune_engage_min_rows=0)
-    pruned.optimize_for_serving()
     pruned.preload_stats()
     pruned.preload_block_meta()
 

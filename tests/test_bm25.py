@@ -62,10 +62,12 @@ def test_score_properties(doc_count, df_frac, sum_ttf_mult, field_len, freq):
 
 
 def test_block_upper_bound_dominates():
+    """A block bound is the score at a competitive (freq, norm) impact; with
+    one impact (max freq 7, shortest length 3) it dominates every doc."""
     avgdl = SIM.avgdl(10_000, 1_000)
     w = SIM.weight(1.0, SIM.idf(50, 1000))
     cache = SIM.norm_inv_cache(avgdl)
-    ub = SIM.score_max(max_freq=7, min_len_norm_byte=int_to_byte4(3), avgdl=avgdl, weight=w)
+    ub = SIM.score(np.array([7], np.float32), cache[np.array([int_to_byte4(3)])], w)[0]
     for freq in (1, 3, 7):
         for ln in (3, 10, 500):
             s = SIM.score(
@@ -117,7 +119,6 @@ def test_boolean_similarity_kernel():
     assert w == np.float32(3.5)
     got = sim.score(np.array([1, 50, 900], np.float32), np.ones(3, np.float32), w)
     assert (got == np.float32(3.5)).all()
-    assert sim.score_max(7, 0, np.float32(1.0), w) == np.float32(3.5)
 
 
 @given(

@@ -59,3 +59,18 @@ def test_profile_dismax_depth(s):
     node = profile(s, q)
     flat = node.table()
     assert len(flat) == 3 and flat[0][0] == 0 and flat[1][0] == 1
+
+
+def test_profile_match_only_boolean_tree(s):
+    """scored=False runs every node's match subplan through the public
+    ``matches()``; row counts equal the scored profile's."""
+    q = Q.BooleanQuery.of(
+        must=(Q.TermQuery("text", "spark"),),
+        should=(Q.TermQuery("text", "table"),),
+        must_not=(Q.TermQuery("text", "join"),),
+    )
+    node = profile(s, q, scored=False)
+    assert node.type == "BooleanQuery"
+    assert [c.type for c in node.children] == ["TermQuery"] * 3
+    assert node.rows == s.matches(q).count() == profile(s, q).rows
+    assert node.children[0].rows == s.matches(Q.TermQuery("text", "spark")).count()

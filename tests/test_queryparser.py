@@ -136,3 +136,67 @@ def test_multi_field_query_parser():
     assert isinstance(q2, Q.BooleanQuery)
     assert {c.query.field for c in q2.clauses} == {"a", "b"}
     assert all(isinstance(c.query, Q.PhraseQuery) for c in q2.clauses)
+
+
+# ---- reference behaviour the shared flexible grammar gives the classic parser
+
+
+def test_fielded_group_applies_field_to_members():
+    """QueryParser.jj Clause passes the field prefix into the group."""
+    assert P.parse("title:(spark join)") == Q.BooleanQuery.of(
+        should=[Q.TermQuery("title", "spark"), Q.TermQuery("title", "join")]
+    )
+
+
+def test_star_colon_star_is_match_all():
+    """QueryParserBase.getWildcardQuery: ``*:*`` -> MatchAllDocsQuery."""
+    assert P.parse("*:*") == Q.MatchAllDocsQuery()
+
+
+def test_analyzer_emptied_must_clause_is_dropped():
+    """QueryParserBase.addClause skips a clause the analyzer emptied, so
+    the conjunction does not turn into zero hits."""
+    assert P.parse("spark AND ...") == Q.BooleanQuery.of(
+        must=[Q.TermQuery("text", "spark")]
+    )
+    # a boosted multi-field copy the analyzer emptied is empty too
+    from lucene_spark.search.queryparser import MultiFieldQueryParser
+
+    qp = MultiFieldQueryParser(["title", "body"], boosts={"title": 2.0})
+    assert qp.parse("spark AND ...") == Q.BooleanQuery.of(
+        must=[qp.parse("spark")]
+    )
+
+
+def test_leading_wildcard_rejected():
+    """allowLeadingWildcard defaults to false in the reference."""
+    for s in ("*", "*ing", "?ing"):
+        with pytest.raises(QueryParseError):
+            P.parse(s)
+
+
+def test_flexible_only_syntax_rejected():
+    """The classic grammar has neither interval functions nor @N groups."""
+    for s in ("fn:ordered(a b)", "(a b)@2"):
+        with pytest.raises(QueryParseError):
+            P.parse(s)
+
+
+def test_multi_field_explicit_field_stays_unboosted():
+    """MultiFieldQueryParser.getFieldQuery boosts only the copies an
+    unfielded clause expands into."""
+    from lucene_spark.search.queryparser import MultiFieldQueryParser
+
+    qp = MultiFieldQueryParser(["title", "body"], boosts={"title": 2.0})
+    assert qp.parse("title:fox") == Q.TermQuery("title", "fox")
+    assert qp.parse("fox title:dog") == Q.BooleanQuery.of(
+        should=[
+            Q.BooleanQuery.of(
+                should=[
+                    Q.BoostQuery(Q.TermQuery("title", "fox"), 2.0),
+                    Q.TermQuery("body", "fox"),
+                ]
+            ),
+            Q.TermQuery("title", "dog"),
+        ]
+    )
